@@ -14,8 +14,7 @@ echo "=== [1/6] zero-steal mover commit A/B (r12 verdict item 4) ==="
 python3 scripts/ab_movers_r13.py
 
 echo "=== [2/6] planner-alone filtered-beam rung at 100x (r12 verdict item 1) ==="
-# GRAFT_REUP_META=1 re-estimates a cached index's dup_multiplicity in place
-SPARK_GRAFT_CPUS=32 GRAFT_REUP_META=1 GRAFT_DUP_MULT=100 \
+SPARK_GRAFT_CPUS=32 GRAFT_DUP_MULT=100 \
   java -Xmx16g -Xms16g $JF -cp "$CP" graft.FilteredBeamScale \
   /tmp/graft_scale_100x vamana 4 64 2>/dev/null | tail -1
 

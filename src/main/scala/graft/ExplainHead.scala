@@ -35,10 +35,10 @@ object ExplainHead {
       // PRE-CHECKPOINT frame the serve materializes, with a
       // representative p* rung, so the bucket PartitionFilters + term +
       // impact_rank row-group prune are evidenced in the dossier
-      val nb = SparseTopK.readTaMeta(spark, idxDir).get.numBuckets
+      val nb = SparseTopK.manifest(spark, idxDir).numBuckets.get
       val bucketOf = terms.map(SparseTopK.bucketOfTerm(_, nb)).distinct
       println("========== head working-set scan (pre-checkpoint frame, p* = 16) ==========")
-      spark.read.parquet(idxDir)
+      SparseTopK.readIndex(spark, idxDir)
         .where(col("bucket").isin(bucketOf: _*))
         .where(col("term").isin(terms: _*) && col("impact_rank") <= 16L)
         .explain("formatted")

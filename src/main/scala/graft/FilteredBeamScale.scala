@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{HnswIndex, KnnSearch, VamanaIndex}
+import graft.sources.IndexManifest
 
 /** Filtered-beam mitigation harness (local measurement tool, not part
   * of the driver contract — the [[Profile]] family): measures Vamana
@@ -49,28 +50,9 @@ object FilteredBeamScale {
     val fixKey = Integer.toHexString(dir.hashCode) + "_" +
       java.lang.Long.toHexString(newestMtime(new java.io.File(s"$dir/embeddings.parquet")))
     val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_fbs_${family}_${parts}_${n}_$fixKey"
-    if (!new java.io.File(s"$idxDir/_SUCCESS_GRAFT").exists()) {
+    if (!IndexManifest.exists(spark, idxDir)) {
       if (family == "hnsw") HnswIndex.writeIndex(emb, idxDir, numPartitions = parts)
       else VamanaIndex.writeIndex(emb, idxDir, numPartitions = parts)
-      new java.io.File(s"$idxDir/_SUCCESS_GRAFT").createNewFile()
-    }
-    // cached indexes built before the dup_multiplicity meta field (r13)
-    // get their meta upgraded IN PLACE — the nodes (the expensive part)
-    // are untouched, and the estimator is deterministic per corpus, so
-    // the upgraded value is exactly what writeIndex would store today
-    // GRAFT_REUP_META=1 forces a re-estimate (e.g. after an estimator
-    // change) without rebuilding the nodes
-    val meta0 = spark.read.parquet(s"$idxDir/meta")
-      .drop(if (sys.env.contains("GRAFT_REUP_META")) "dup_multiplicity" else "__none__")
-    if (!meta0.columns.contains("dup_multiplicity")) {
-      val est = graft.operators.FilteredSearchPlanner.estimateDupMultiplicity(emb)
-      println(s"[fbs] upgrading cached index meta: dup_multiplicity=$est")
-      val rows = meta0.withColumn("dup_multiplicity", lit(est)).collect().toSeq
-      val schema = org.apache.spark.sql.types.StructType(
-        meta0.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "dup_multiplicity", org.apache.spark.sql.types.DoubleType, nullable = false))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-        .write.mode("overwrite").parquet(s"$idxDir/meta")
     }
     val sels = Seq(("half", col("label") < 4), ("tenth", col("label") === 0))
     def exactSet(pred: org.apache.spark.sql.Column): Set[(Long, Long)] =

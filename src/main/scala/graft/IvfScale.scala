@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.IvfIndex
+import graft.sources.IndexManifest
 
 /** Large-nlist IVF scaling harness (local measurement tool, not part of
   * the driver contract — the [[Profile]] family): builds and probes an
@@ -64,7 +65,7 @@ object IvfScale {
       java.lang.Long.toHexString(newestMtime(new java.io.File(s"$dir/embeddings.parquet")))
     val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_ivfscale_${n}_${nl}_$fixKey"
     val (buildS, _) = time {
-      if (!new java.io.File(s"$idxDir/_SUCCESS_GRAFT").exists()) {
+      if (!IndexManifest.exists(spark, idxDir)) {
         // cluster-clustered write: without it every write task sprays a
         // file into each of the nlist partition dirs (nlist × tasks tiny
         // files at nlist = 8192); one shuffle on the partition key keeps
@@ -72,7 +73,6 @@ object IvfScale {
         IvfIndex.writeIndex(
           IvfIndex.assign(emb, cents).repartition(col("cluster_id")),
           cents, idxDir)
-        new java.io.File(s"$idxDir/_SUCCESS_GRAFT").createNewFile()
       }
     }
     val (loadedCents, assignments) = IvfIndex.loadIndex(spark, idxDir)
@@ -94,18 +94,24 @@ object IvfScale {
     val bucketB = if (args.length > 4) args(4).toInt else 0
     val bucketJson = if (bucketB <= 0) "" else {
       val bDir = s"${idxDir}_b$bucketB"
+      val bFamily = "ivf-cluster-buckets"
       val (bBuildS, _) = time {
-        if (!new java.io.File(s"$bDir/_SUCCESS_GRAFT").exists()) {
-          assignments
+        if (!IndexManifest.exists(spark, bDir)) {
+          val bucketed = assignments
             .withColumn("cluster_bucket",
               pmod(col("cluster_id"), lit(bucketB.toLong)))
+          bucketed
             .repartition(col("cluster_bucket"))
             .sortWithinPartitions(col("cluster_id"))
             .write.partitionBy("cluster_bucket").mode("overwrite").parquet(bDir)
-          new java.io.File(s"$bDir/_SUCCESS_GRAFT").createNewFile()
+          IndexManifest.write(spark, bDir, IndexManifest(bFamily,
+            params = Map("buckets" -> bucketB.toDouble),
+            tables = Map(IndexManifest.Root -> IndexManifest.writtenSchema(
+              bucketed, Some("cluster_bucket" -> (bucketB - 1L))))))
         }
       }
-      val bAssign = spark.read.parquet(bDir)
+      val bAssign = IndexManifest.read(spark, bDir, bFamily)
+        .table(spark, bDir, IndexManifest.Root)
       val probedClusters = IvfIndex.probes(q, loadedCents, nprobe)
         .select(col("cluster_id")).distinct().collect().map(_.getLong(0))
       val buckets = probedClusters.map(c => math.floorMod(c, bucketB.toLong)).distinct

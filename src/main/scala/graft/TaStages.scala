@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SparseTopK
+import graft.sources.IndexManifest
 
 /** TA lexical-serve stage attribution harness (local measurement tool,
   * not part of the driver contract — the [[Profile]] family; r11
@@ -44,7 +45,7 @@ object TaStages {
     spark.sparkContext.setLogLevel("WARN")
 
     // q_ta_persisted's exact knobs (numBuckets = 0 → the build-time
-    // scaling rule; the serve reads the chosen count from _ta_meta.json)
+    // scaling rule; the serve reads the chosen count from the manifest)
     val terms = Seq("merge", "vector", "batch", "slow", "spark")
     val k = 15
     val numBuckets = 0
@@ -54,10 +55,9 @@ object TaStages {
     val fixKey = Integer.toHexString(dir.hashCode) + "_" +
       java.lang.Long.toHexString(newestMtime(new java.io.File(s"$dir/documents.parquet")))
     val idxDir = s"${System.getProperty("java.io.tmpdir")}/graft_tastages_$fixKey"
-    if (!new java.io.File(s"$idxDir/_SUCCESS_GRAFT").exists()) {
+    if (!IndexManifest.exists(spark, idxDir)) {
       SparseTopK.writeIndex(SparseTopK.buildImpactIndex(
         spark.read.parquet(s"$dir/documents.parquet")), idxDir, numBuckets)
-      new java.io.File(s"$idxDir/_SUCCESS_GRAFT").createNewFile()
       SparseTopK.releaseBuildCache()
     }
 
@@ -68,9 +68,8 @@ object TaStages {
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
     // the same bucket derivation taTopKPersisted runs (bucket count from
-    // the index's own meta — the r14 build-time scaling rule)
-    val nb = SparseTopK.readTaMeta(spark, idxDir)
-      .map(_.numBuckets).getOrElse(16)
+    // the index's own manifest — the r14 build-time scaling rule)
+    val nb = SparseTopK.manifest(spark, idxDir).numBuckets.get
     val bucketOf = {
       import spark.implicits._
       terms.distinct.toDF("term")
@@ -85,7 +84,7 @@ object TaStages {
     var depth = 0L
     for (_ <- 1 to reps) {
       val (tr, postings) = time {
-        val p = spark.read.parquet(idxDir)
+        val p = SparseTopK.readIndex(spark, idxDir)
           .where(col("bucket").isin(bucketOf: _*))
           .where(col("term").isin(terms.distinct: _*))
           .localCheckpoint(true)
@@ -101,7 +100,7 @@ object TaStages {
       loopT += tl
       depth = stats.prefixDepth
       val (tf, _) = time(
-        SparseTopK.taTopKPersisted(spark, idxDir, terms, k, nb)
+        SparseTopK.taTopKPersisted(spark, idxDir, terms, k)
           .write.format("noop").mode("overwrite").save())
       fullT += tf
     }

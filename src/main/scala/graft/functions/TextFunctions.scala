@@ -95,12 +95,6 @@ object TextFunctions {
   def alphaRatio(text: Column): Column =
     length(regexp_replace(text, "[^a-z]", "")).cast("double") / length(text)
 
-  /** Mean token length (quality signal). */
-  def avgTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks)
-  }
-
   /** English stopwords (marker list for quality scoring). */
   val enStopwords: Seq[String] =
     Seq("the", "a", "and", "of", "to", "in", "is", "it", "that", "for")

@@ -65,11 +65,6 @@ object Dsir {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Hashed-gram bucket counts for a corpus — text-input wrapper over
-    * [[bucketCountsB]]. */
-  def bucketCounts(docs: DataFrame, b: Int, textCol: String = "text"): DataFrame =
-    bucketCountsB(bucketed(docs, b, textCol))
-
   /** Dense per-bucket log importance ratio log p̂_b − log q̂_b with add-1
     * smoothing, as a driver-side map (model-plane: B entries). Buckets
     * with no counts on either side still carry the smoothed ratio. */

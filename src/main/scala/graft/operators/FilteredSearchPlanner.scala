@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexManifest
+
 /** Selectivity-based filtered-search planning — the cardinality rule
   * production filtered-ANN engines apply per query (Qdrant's cardinality
   * estimator picks payload-filtered brute scan vs graph walk; ACORN
@@ -85,14 +87,15 @@ object FilteredSearchPlanner {
     * b₁ scales with log₂(n) (random collisions stay negligible at any
     * corpus size), b₂ = b₁ + 8; hyperplanes are the engine's seeded
     * [[CosineLsh.planes]], so the estimate is deterministic per
-    * corpus. Empty corpus → 1.0 (no floor). */
+    * corpus. Empty corpus → 1.0 (no floor). `shape` hands in a known
+    * (row count, max vector dimension) — the first aggregate's own
+    * result — so a caller that already holds them runs only the
+    * aggregation chain. */
   def estimateDupMultiplicity(embeddings: DataFrame,
-      numBands: Int = 4, seed: Long = 42L): Double = {
-    val r0 = embeddings
-      .agg(count(lit(1)).as("n"), max(size(col("embedding"))).as("d")).head()
-    val n = r0.getLong(0)
+      numBands: Int = 4, seed: Long = 42L,
+      shape: Option[(Long, Int)] = None): Double = {
+    val (n, dim) = shape.getOrElse(shapeOf(embeddings))
     if (n == 0L) return 1.0
-    val dim = r0.getInt(1)
     val b1 = math.min(22,
       math.max(8, (math.log(n.toDouble + 1) / math.log(2)).ceil.toInt + 2))
     val b2 = b1 + 8
@@ -133,6 +136,14 @@ object FilteredSearchPlanner {
     math.max(1.0, math.min(math.min(extrapolated, cap), n.toDouble))
   }
 
+  /** (row count, max vector dimension) of an `embedding` corpus — one
+    * aggregate; the dimension is 0 for an empty corpus. */
+  def shapeOf(embeddings: DataFrame): (Long, Int) = {
+    val r = embeddings
+      .agg(count(lit(1)).as("n"), max(size(col("embedding"))).as("d")).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0 else r.getInt(1))
+  }
+
   /** [[estimateDupMultiplicity]] memoized per JVM (r13 verdict "what's
     * wrong" 3: q_hnsw_persisted's exhaustive pin re-estimated an
     * UNCHANGED corpus every iteration — the estimate is deterministic
@@ -144,23 +155,71 @@ object FilteredSearchPlanner {
     * LocalRelation's canonical form does not include its DATA, so two
     * different in-memory corpora with one schema would falsely share an
     * entry (caught by FilteredRecallSpec's two distinct fixtures).
-    * Incremental-add refreshes ([[HnswIndex.addToIndex]]) call the
+    * Incremental-add refreshes ([[commitGraphAdd]]) call the
     * uncached estimator — their corpus genuinely changed. */
   private val estimateCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
   def estimateDupMultiplicityCached(embeddings: DataFrame,
-      numBands: Int = 4, seed: Long = 42L): Double = {
+      numBands: Int = 4, seed: Long = 42L,
+      shape: Option[(Long, Int)] = None): Double = {
     val files = embeddings.inputFiles
-    if (files.isEmpty) return estimateDupMultiplicity(embeddings, numBands, seed)
+    if (files.isEmpty) return estimateDupMultiplicity(embeddings, numBands, seed, shape)
     val key = embeddings.queryExecution.analyzed.canonicalized.toString +
       "|" + files.sorted.mkString(",") + s"|$numBands|$seed"
     Option(estimateCache.get(key)).map(_.doubleValue()).getOrElse {
-      val v = estimateDupMultiplicity(embeddings, numBands, seed)
+      val v = estimateDupMultiplicity(embeddings, numBands, seed, shape)
       if (estimateCache.size > 64) estimateCache.clear() // corpus-count-bounded
       estimateCache.put(key, v)
       v
     }
+  }
+
+  /** The manifest of a freshly written HNSW or Vamana index. The
+    * corpus's near-dup multiplicity rides in it so filtered serving can
+    * apply the k·m beam floor with no manual knob (r12 verdict item 1),
+    * memoized per (corpus, seed) within the JVM (r13: a rebuild of an
+    * unchanged corpus re-ran the deterministic estimate) and handed the
+    * exact row count and dimension of the one shape aggregate. The row
+    * count snapshots WHEN the estimate was taken, so [[commitGraphAdd]]
+    * can re-estimate once incremental adds outgrow it (r13 verdict
+    * item 3). */
+  private[operators] def graphManifest(family: String, params: Map[String, Double],
+      parts: Int, embeddings: DataFrame, nodes: DataFrame): IndexManifest = {
+    val (n, dim) = shapeOf(embeddings)
+    IndexManifest(family,
+      params = params + ("num_partitions" -> parts.toDouble),
+      rows = Some(n), dim = Some(dim),
+      dupMultiplicity = Some(estimateDupMultiplicityCached(embeddings, shape = Some((n, dim)))),
+      rowsAtEstimate = Some(n),
+      tables = Map("nodes" -> IndexManifest.writtenSchema(nodes, Some("part_id" -> (parts - 1L)))))
+  }
+
+  /** Growth past the estimate's row snapshot that makes a graph add
+    * re-run the estimator (r13 verdict item 3). */
+  private val DupEstimateRefreshGrowth = 1.1
+
+  /** Commit an incremental add to a persisted HNSW or Vamana index: the
+    * manifest's row count grows by exactly the `inserted` vectors the add
+    * stored (no listing or count of the nodes), and once the index has
+    * grown [[DupEstimateRefreshGrowth]] past the snapshot its
+    * `dup_multiplicity` describes, the estimator re-runs UNCACHED over
+    * the index's own stored vectors (the corpus genuinely changed) with
+    * the known n and dim, so only its aggregation chain runs. A
+    * FreshDiskANN-style deployment that streams in a heavily replicated
+    * batch thereby regains the k·m floor within one refresh interval
+    * instead of under-flooring its filtered beams forever. The manifest
+    * is rewritten in place, never deleted, so serves run beside adds. */
+  private[operators] def commitGraphAdd(spark: org.apache.spark.sql.SparkSession,
+      dir: String, m: IndexManifest, inserted: Long): Unit = {
+    val total = m.rows.get + inserted
+    val grown = m.copy(rows = Some(total))
+    IndexManifest.write(spark, dir,
+      if (total.toDouble < m.rowsAtEstimate.get * DupEstimateRefreshGrowth) grown
+      else grown.copy(rowsAtEstimate = Some(total),
+        dupMultiplicity = Some(estimateDupMultiplicity(
+          m.table(spark, dir, "nodes").select(col("vec_id"), col("vec").as("embedding")),
+          shape = Some((total, m.dim.get))))))
   }
 
   /** The measured filtered-beam rule (SCALE.md round-11 ladder, made
@@ -229,37 +288,6 @@ object FilteredSearchPlanner {
       VamanaIndex.selfSearchFiltered(embeddings, predicate, numQueries, k,
         numPartitions = numPartitions,
         searchBeam = autoBeam(searchBeam, Some(sel)))
-    }
-  }
-}
-
-/** Per-JVM memo for the graph families' stored `dup_multiplicity` reads
-  * (r13 verdict "what's wrong" 2: every filtered serve call paid a
-  * driver parquet read + head() of `dir/meta`). Keyed by (meta path,
-  * directory mtime): an `addToIndex` refresh rewrites the meta
-  * directory, bumping its mtime, so a staleness window never opens —
-  * the one extra getFileStatus per call is the price of that
-  * correctness. Values memo the full Option (a pre-r13 index's None is
-  * as cacheable as a value). */
-private[operators] object IndexMetaCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Option[Double]]()
-
-  def cachedDupMultiplicity(spark: org.apache.spark.sql.SparkSession,
-      metaDir: String)(load: => Option[Double]): Option[Double] = {
-    val p = new org.apache.hadoop.fs.Path(metaDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mtime =
-      try fs.getFileStatus(p).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return load }
-    val key = (metaDir, mtime)
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      if (cache.size > 256) cache.clear() // index-count-bounded
-      val v = load
-      cache.put(key, v)
-      v
     }
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexManifest
+
 /** HNSW ANN — per-partition hierarchical navigable-small-world graphs
   * (SURVEY §2.3 J4; reference `IndexHNSWFlat(d, M=32)`, efConstruction=64,
   * efSearch=64 — vector_search_cluster.py:1043-1045, :551-552).
@@ -481,9 +483,12 @@ object HnswIndex {
   // level, vec, adj) where `seq` is the node's insertion ordinal (the
   // array index every adjacency entry refers to) and `adj` is the
   // per-layer neighbor-list array (layer 0 first) — written
-  // partitionBy(part_id), plus a one-row meta table (build params +
-  // partition count, the shards_metadata analog). Loading fills the
-  // LocalGraph arrays DIRECTLY — zero insert work, spec-gated.
+  // partitionBy(part_id), plus the index manifest (build params +
+  // partition count, the shards_metadata analog — [[IndexManifest]]).
+  // Loading fills the LocalGraph arrays DIRECTLY — zero insert work,
+  // spec-gated.
+
+  private val Family = "hnsw"
 
   /** One serialized graph node. */
   case class HnswNode(part_id: Int, seq: Int, vec_id: Long, level: Int,
@@ -516,8 +521,10 @@ object HnswIndex {
 
   /** S4 — build the per-partition graphs exactly as [[selfSearch]] does
     * (same hash partitioning, same sorted insertion order ⇒ bit-identical
-    * graphs) and persist them: `dir/nodes` partitioned by part_id,
-    * `dir/meta` carrying (m, ef_construction, num_partitions). */
+    * graphs) and persist them: `dir/nodes` partitioned by part_id, then
+    * the manifest carrying (m, ef_construction, num_partitions), the row
+    * count, dimension and near-dup multiplicity, and the nodes schema
+    * ([[FilteredSearchPlanner.graphManifest]]). */
   def writeIndex(
       embeddings: DataFrame,
       dir: String,
@@ -529,7 +536,8 @@ object HnswIndex {
       if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
     val p = params
-    embeddings
+    IndexManifest.delete(spark, dir)
+    val nodes = embeddings
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .repartition(parts, col("vec_id"))
@@ -539,47 +547,35 @@ object HnswIndex {
         rows.foreach { case (id, v) => graph.insert(id, v) }
         graphToRows(graph, org.apache.spark.TaskContext.getPartitionId())
       }
-      .write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    // the corpus's near-dup multiplicity rides in the meta so filtered
-    // serving can apply the k·m beam floor with no manual knob (r12
-    // verdict item 1) — one extra map-side aggregate at build time,
-    // memoized per (corpus, seed) within the JVM (r13: a rebuild of an
-    // unchanged corpus re-ran the deterministic estimate). The row
-    // count snapshots WHEN the estimate was taken, so [[addToIndex]]
-    // can re-estimate once incremental adds outgrow it (r13 verdict
-    // item 3 — a streamed-in replicated batch must not silently
-    // under-floor the filtered beams).
-    val dupMult = FilteredSearchPlanner.estimateDupMultiplicityCached(embeddings)
-    val nRows = embeddings.count()
-    Seq((p.m, p.efConstruction, parts, dupMult, nRows))
-      .toDF("m", "ef_construction", "num_partitions", "dup_multiplicity",
-        "rows_at_estimate")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    nodes.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
+    IndexManifest.write(spark, dir, FilteredSearchPlanner.graphManifest(Family,
+      Map("m" -> p.m.toDouble, "ef_construction" -> p.efConstruction.toDouble),
+      parts, embeddings, nodes.toDF()))
   }
 
-  /** Stored build params + partition count — the ONE place the meta
-    * schema is parsed (by name, not ordinal: adding a meta field can
-    * never silently mis-parse a reader). */
-  private def readMeta(spark: org.apache.spark.sql.SparkSession, dir: String,
-      efSearch: Int): (Params, Int) = {
-    val r = spark.read.parquet(s"$dir/meta").head()
-    (Params(m = r.getAs[Int]("m"),
-       efConstruction = r.getAs[Int]("ef_construction"), efSearch = efSearch),
-     r.getAs[Int]("num_partitions"))
+  /** Stored build params + partition count (efSearch is a read knob). */
+  private def paramsOf(m: IndexManifest, efSearch: Int): (Params, Int) =
+    (Params(m = m.param("m").toInt, efConstruction = m.param("ef_construction").toInt,
+       efSearch = efSearch),
+     m.param("num_partitions").toInt)
+
+  /** The committed index's manifest, build params and nodes table. */
+  private def open(spark: org.apache.spark.sql.SparkSession, dir: String,
+      efSearch: Int): (IndexManifest, Params, Int, DataFrame) = {
+    val m = IndexManifest.read(spark, dir, Family)
+    val (p, parts) = paramsOf(m, efSearch)
+    (m, p, parts, m.table(spark, dir, "nodes"))
   }
 
-  /** The stored build-time near-dup multiplicity, None for indexes
-    * written before the field existed (schema-checked — the add-a-field
-    * tolerance [[readMeta]]'s by-name contract promises). Package-visible
-    * so FilteredRecallSpec can assert the stored estimate. */
-  private[operators] def readDupMultiplicity(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[Double] =
-    IndexMetaCache.cachedDupMultiplicity(spark, s"$dir/meta") {
-      val df = spark.read.parquet(s"$dir/meta")
-      if (df.schema.fieldNames.contains("dup_multiplicity"))
-        Some(df.head().getAs[Double]("dup_multiplicity"))
-      else None
-    }
+  /** The first `numQueries` stored vectors — self-search queries come off
+    * the index's own rows. The column predicate sits BEFORE the typed
+    * view: a closure filter is opaque to Catalyst and would scan and
+    * deserialize the whole nodes table; this one pushes into the scan. */
+  private def storedQueries(nodes: DataFrame, numQueries: Int): Array[(Long, Array[Float])] = {
+    import nodes.sparkSession.implicits._
+    nodes.where(col("vec_id") < numQueries).as[HnswNode]
+      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
+  }
 
   /** The A1 partial+final top-k merge every self-search form shares.
     * Fresh-build, persisted and filtered searches MUST all go through
@@ -599,15 +595,15 @@ object HnswIndex {
   /** Shared persisted-search tail: walk every stored graph for the
     * (collected, broadcast) query batch, merge shard-local top-k. */
   private def searchGraphs(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
+      nodes: DataFrame,
       queries: Array[(Long, Array[Float])],
       k: Int,
       p: Params,
       excludeSelf: Boolean): DataFrame = {
+    val spark = nodes.sparkSession
     import spark.implicits._
     val bcQueries = spark.sparkContext.broadcast(queries)
-    val partials = spark.read.parquet(s"$dir/nodes").as[HnswNode]
+    val partials = nodes.as[HnswNode]
       .groupByKey(_.part_id)
       .flatMapGroups { (_, it) =>
         val graph = graphFromRows(it.toArray, p)
@@ -637,13 +633,10 @@ object HnswIndex {
       k: Int,
       efs: Seq[Int]): DataFrame = {
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efs.max)
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[HnswNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val (_, p, _, nodes) = open(spark, dir, efs.max)
+    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
     val efList = efs
-    val partials = spark.read.parquet(s"$dir/nodes").as[HnswNode]
+    val partials = nodes.as[HnswNode]
       .groupByKey(_.part_id)
       .flatMapGroups { (_, it) =>
         val graph = graphFromRows(it.toArray, p)
@@ -678,15 +671,8 @@ object HnswIndex {
       numQueries: Int,
       k: Int,
       efSearch: Int = 64): DataFrame = {
-    import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efSearch)
-    // Column predicate BEFORE the typed view: a closure filter is opaque
-    // to Catalyst and would scan+deserialize the whole nodes table just
-    // to collect numQueries vectors; this one pushes into the parquet scan.
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[HnswNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    searchGraphs(spark, dir, queries, k, p, excludeSelf = true)
+    val (_, p, _, nodes) = open(spark, dir, efSearch)
+    searchGraphs(nodes, storedQueries(nodes, numQueries), k, p, excludeSelf = true)
   }
 
   /** The serving-path search: ARBITRARY query vectors against a
@@ -704,10 +690,10 @@ object HnswIndex {
       efSearch: Int = 64): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efSearch)
+    val (_, p, _, nodes) = open(spark, dir, efSearch)
     val qs = queries.select(col("query_id"), col("qvec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    searchGraphs(spark, dir, qs, k, p, excludeSelf = false)
+    searchGraphs(nodes, qs, k, p, excludeSelf = false)
   }
 
   /** Exhaustive-beam search over a PERSISTED index — the stored-rows twin
@@ -727,12 +713,9 @@ object HnswIndex {
       numQueries: Int,
       k: Int): DataFrame = {
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efSearch = 64)
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[HnswNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val partials = spark.read.parquet(s"$dir/nodes").as[HnswNode]
+    val (_, p, _, nodes) = open(spark, dir, efSearch = 64)
+    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
+    val partials = nodes.as[HnswNode]
       .groupByKey(_.part_id)
       .flatMapGroups { (_, it) =>
         val graph = graphFromRows(it.toArray, p)
@@ -763,12 +746,9 @@ object HnswIndex {
     * size each shard emits its EXACT filtered top-k and the merge is the
     * exact global answer (same oracle; hash unchanged).
     *
-    * @note BEHAVIOR CHANGE in r13: `dupMultiplicity = None` no longer
-    *   means "fixed caller beam" — on indexes whose meta carries the
-    *   build-time `dup_multiplicity` field (r13+ writes), None OPTS IN
-    *   to the automatic k·m beam floor. Callers that relied on None
-    *   pinning the beam must pass `Some(1.0)` explicitly. Pre-r13
-    *   indexes (no meta field) keep the old fixed-beam behavior. */
+    * @note `dupMultiplicity = None` OPTS IN to the automatic k·m beam
+    *   floor from the build-time estimate in the manifest; pass
+    *   `Some(1.0)` to pin the caller's beam. */
   def selfSearchFilteredPersisted(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -779,31 +759,25 @@ object HnswIndex {
       selectivity: Option[Double] = None,
       dupMultiplicity: Option[Double] = None): DataFrame = {
     import spark.implicits._
-    val (p, parts) = readMeta(spark, dir, efSearch = Params().efSearch)
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[HnswNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val (m, p, parts, nodes) = open(spark, dir, efSearch = Params().efSearch)
+    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
     // ef ≈ max(ef/selectivity, k·dup-multiplicity) — the measured rules
     // (FilteredSearchPlanner.autoBeam). dupMultiplicity = None defaults
-    // to the BUILD-TIME estimate stored in the index meta (r12 verdict
-    // item 1: the floor with no manual knob); pass Some(1.0) to pin the
-    // caller's beam. Indexes written before the meta field carry None →
-    // no floor, the pre-r13 behavior. A saturated caller beam
+    // to the BUILD-TIME estimate stored in the manifest (r12 verdict
+    // item 1: the floor with no manual knob). A saturated caller beam
     // (Int.MaxValue — the exactness pins) makes the floor a
-    // mathematical no-op, so the meta is not even consulted (ADVICE
-    // r13); other callers' reads memo per (dir, meta mtime).
+    // mathematical no-op (ADVICE r13).
     val baseEf = math.max(if (efFiltered > 0) efFiltered else p.efSearch, k + 1)
     val mEff =
       if (baseEf == Int.MaxValue) None
-      else dupMultiplicity.orElse(readDupMultiplicity(spark, dir))
+      else dupMultiplicity.orElse(m.dupMultiplicity)
     val efF = FilteredSearchPlanner.autoBeam(baseEf, selectivity, k, mEff)
     val allowByPart = allowed
       .select(pmod(hash(col("vec_id")), lit(parts)).cast("int").as("part_id"),
         col("vec_id"))
       .as[(Int, Long)]
       .groupByKey(_._1)
-    val partials = spark.read.parquet(s"$dir/nodes").as[HnswNode]
+    val partials = nodes.as[HnswNode]
       .groupByKey(_.part_id)
       .cogroup(allowByPart) { (_, nodeIt, allowIt) =>
         val rows = nodeIt.toArray
@@ -838,17 +812,19 @@ object HnswIndex {
     *
     * Like FAISS, the result is insertion-order-dependent: adding B after
     * building on A yields the A-then-B graph, not the fresh A∪B graph —
-    * same neighbors-quality class, different (deterministic) rows. */
+    * same neighbors-quality class, different (deterministic) rows. The
+    * manifest then commits the grown row count
+    * ([[FilteredSearchPlanner.commitGraphAdd]]). */
   def addToIndex(newVectors: DataFrame, dir: String): Unit = {
     val spark = newVectors.sparkSession
     import spark.implicits._
-    val (p, parts) = readMeta(spark, dir, efSearch = Params().efSearch)
+    val (m, p, parts, nodes) = open(spark, dir, efSearch = Params().efSearch)
     val routed = newVectors
       .select(col("vec_id"), col("embedding"))
       .withColumn("part_id", pmod(hash(col("vec_id")), lit(parts)))
     val touched = routed.select(col("part_id")).distinct()
       .collect().map(_.getInt(0))
-    val existing = spark.read.parquet(s"$dir/nodes").as[HnswNode]
+    val existing = nodes.as[HnswNode]
       .filter(col("part_id").isin(touched.map(Int.box): _*))
       .groupByKey(_.part_id)
     val adds = routed
@@ -860,7 +836,10 @@ object HnswIndex {
     // a live plan still reads is a read-own-delete race the moment the
     // plan shape changes or a task retries mid-commit. localCheckpoint
     // (eager) pins the computed rows in block storage, severing the
-    // lineage back to the files the commit is about to delete.
+    // lineage back to the files the commit is about to delete. The
+    // inserted count is exact: the cogroup runs once per partition, in
+    // the checkpoint job's result stage.
+    val inserted = spark.sparkContext.longAccumulator
     val rewritten = existing.cogroup(adds) { (pid, oldIt, newIt) =>
       val graph = graphFromRows(oldIt.toArray, p)
       // idempotent by id: a replayed batch (crash between the overwrite
@@ -868,8 +847,9 @@ object HnswIndex {
       // graph already holds — skip them so the replay is a no-op, not a
       // duplicate-node insert
       val have = graph.ids.toSet
-      newIt.toArray.sortBy(_._2)
-        .foreach { case (_, id, v) => if (!have.contains(id)) graph.insert(id, v) }
+      newIt.toArray.sortBy(_._2).foreach { case (_, id, v) =>
+        if (!have.contains(id)) { graph.insert(id, v); inserted.add(1L) }
+      }
       graphToRows(graph, pid)
     }.localCheckpoint(true)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -883,44 +863,7 @@ object HnswIndex {
       }
       rewritten.unpersist(blocking = false)
     }
-    refreshDupMultiplicity(spark, dir)
-  }
-
-  /** Keep the stored k·m floor honest across incremental adds (r13
-    * verdict item 3): the build-time `dup_multiplicity` described the
-    * corpus at `rows_at_estimate`; once adds grow the index past
-    * [[DupEstimateRefreshGrowth]] of that snapshot, re-run the one-pass
-    * estimator over the index's OWN stored vectors and rewrite the meta
-    * (new snapshot = current rows). A FreshDiskANN-style deployment that
-    * streams in a heavily-replicated batch therefore regains the floor
-    * within one refresh interval instead of silently under-flooring its
-    * filtered beams forever. Growth below the threshold leaves the meta
-    * untouched (adds stay O(touched partitions)); pre-r13 indexes carry
-    * no estimate and are left alone. */
-  private val DupEstimateRefreshGrowth = 1.1
-
-  private def refreshDupMultiplicity(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val fields = metaDf.schema.fieldNames.toSet
-    if (!fields.contains("dup_multiplicity")) return
-    val r = metaDf.head()
-    val rowsAt =
-      if (fields.contains("rows_at_estimate")) r.getAs[Long]("rows_at_estimate")
-      else 0L // r13 meta: no snapshot recorded — refresh on the first add
-    val total = spark.read.parquet(s"$dir/nodes").count()
-    if (total.toDouble < rowsAt * DupEstimateRefreshGrowth) return
-    // UNCACHED estimate — the corpus genuinely changed; the nodes table
-    // (one row per vector) IS the current corpus
-    val dupMult = FilteredSearchPlanner.estimateDupMultiplicity(
-      spark.read.parquet(s"$dir/nodes")
-        .select(col("vec_id"), col("vec").as("embedding")))
-    Seq((r.getAs[Int]("m"), r.getAs[Int]("ef_construction"),
-        r.getAs[Int]("num_partitions"), dupMult, total))
-      .toDF("m", "ef_construction", "num_partitions", "dup_multiplicity",
-        "rows_at_estimate")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    FilteredSearchPlanner.commitGraphAdd(spark, dir, m, inserted.value)
   }
 
   /** Structural fingerprint for the q_hnsw_levels oracle query: the
@@ -944,8 +887,8 @@ object HnswIndex {
       dir: String,
       efSearch: Int = 64): Map[Int, LocalGraph] = {
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efSearch)
-    spark.read.parquet(s"$dir/nodes").as[HnswNode].collect()
+    val (_, p, _, nodes) = open(spark, dir, efSearch)
+    nodes.as[HnswNode].collect()
       .groupBy(_.part_id)
       .map { case (pid, rows) => pid -> graphFromRows(rows, p) }
   }
@@ -962,12 +905,17 @@ object HnswIndex {
     import spark.implicits._
     val g = new LocalGraph(params)
     centroids.sortBy(_._1).foreach { case (cid, v) => g.insert(cid, v) }
-    spark.createDataset(graphToRows(g, 0).toSeq)
-      .write.mode("overwrite").parquet(s"$dir/coarse_nodes")
-    Seq((params.m, params.efConstruction, 1))
-      .toDF("m", "ef_construction", "num_partitions")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    IndexManifest.delete(spark, dir)
+    val nodes = spark.createDataset(graphToRows(g, 0).toSeq)
+    nodes.write.mode("overwrite").parquet(s"$dir/coarse_nodes")
+    IndexManifest.write(spark, dir, IndexManifest(CoarseFamily,
+      params = Map("m" -> params.m.toDouble,
+        "ef_construction" -> params.efConstruction.toDouble, "num_partitions" -> 1.0),
+      rows = Some(centroids.length.toLong), dim = centroids.headOption.map(_._2.length),
+      tables = Map("coarse_nodes" -> IndexManifest.writtenSchema(nodes.toDF()))))
   }
+
+  private val CoarseFamily = "hnsw-coarse"
 
   /** [[coarseProbes]] against a persisted coarse-quantizer graph:
     * reload driver-side (direct fill), broadcast, walk per query row. */
@@ -978,9 +926,9 @@ object HnswIndex {
       efSearch: Int = 64): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir, efSearch)
-    val g = graphFromRows(
-      spark.read.parquet(s"$dir/coarse_nodes").as[HnswNode].collect(), p)
+    val m = IndexManifest.read(spark, dir, CoarseFamily)
+    val (p, _) = paramsOf(m, efSearch)
+    val g = graphFromRows(m.table(spark, dir, "coarse_nodes").as[HnswNode].collect(), p)
     val bc = spark.sparkContext.broadcast(g)
     val ef = math.max(p.efSearch, nprobe)
     queries.select(col("query_id"), col("qvec"))

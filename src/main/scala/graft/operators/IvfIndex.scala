@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
+import graft.sources.IndexManifest
 
 /** IVF (inverted-file) ANN index — build + search (SURVEY §2.3 J2, §2.4
   * A2/A4; reference build vector_search_cluster.py:1023-1031, search via
@@ -177,46 +178,62 @@ object IvfIndex {
       .where(col("rank") <= k)
   }
 
+  private val Family = "ivf"
+
   /** S4 — persist the index as partition-pruned tables: assignments
     * partitioned by cluster_id (the inverted lists — a probe for cluster c
-    * reads only partition c), centroids as a small side table
-    * (vector_search_cluster.py:1051-1066's shard files + metadata). */
+    * reads only partition c), centroids as a small side table, then the
+    * manifest with both schemas (vector_search_cluster.py:1051-1066's
+    * shard files + metadata). The same layout holds SPANN's replicated
+    * lists ([[assignMulti]]). */
   def writeIndex(assignments: DataFrame, centroids: Array[Centroid], dir: String): Unit = {
     val spark = assignments.sparkSession
-    // REBALANCE by cluster_id before the partitioned write (guide §6):
-    // without it every scan task writes a file into every cluster
-    // directory it touches — tasks × nlist small files at scale (and at
-    // bench scale ONE task compresses every file serially). AQE sizes
-    // the rebalance output to the advisory partition size, so inverted
-    // lists come out as few, advisory-sized files per directory and the
-    // parquet encoding parallelizes across the post-shuffle tasks —
-    // scale-adaptive in both directions, no core-count constant.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val assignF = Future {
-      assignments.hint("rebalance", col("cluster_id")).write.mode("overwrite")
-        .partitionBy("cluster_id").parquet(s"$dir/assignments")
-    }
+    IndexManifest.delete(spark, dir)
+    val assignF = Future(writeLists(assignments, dir, "overwrite"))
     // the centroid side table is independent of the lists — overlap the
     // two write jobs (guide §2.6)
     import spark.implicits._
-    val centF = Future {
-      centroids.toSeq.toDF("cid", "vec")
-        .write.mode("overwrite").parquet(s"$dir/centroids")
-    }
+    val cents = centroids.toSeq.toDF("cid", "vec")
+    val centF = Future(cents.write.mode("overwrite").parquet(s"$dir/centroids"))
     Await.result(assignF, Duration.Inf)
     Await.result(centF, Duration.Inf)
+    val maxCid = centroids.iterator.map(c => math.abs(c._1)).maxOption.getOrElse(0L)
+    IndexManifest.write(spark, dir, IndexManifest(Family,
+      params = Map("nlist" -> centroids.length.toDouble),
+      dim = centroids.headOption.map(_._2.length),
+      tables = Map(
+        "assignments" -> IndexManifest.writtenSchema(assignments, Some("cluster_id" -> maxCid)),
+        "centroids" -> IndexManifest.writtenSchema(cents))))
   }
+
+  /** The inverted-list write. REBALANCE by cluster_id before the
+    * partitioned write (guide §6): without it every scan task writes a
+    * file into every cluster directory it touches — tasks × nlist small
+    * files at scale (and at bench scale ONE task compresses every file
+    * serially). AQE sizes the rebalance output to the advisory partition
+    * size, so inverted lists come out as few, advisory-sized files per
+    * directory and the parquet encoding parallelizes across the
+    * post-shuffle tasks — scale-adaptive in both directions, no
+    * core-count constant. */
+  private def writeLists(assignments: DataFrame, dir: String, mode: String): Unit =
+    assignments.hint("rebalance", col("cluster_id")).write.mode(mode)
+      .partitionBy("cluster_id").parquet(s"$dir/assignments")
 
   /** `index.add` on a live persisted index (the reference's incremental
     * add, vector_search_cluster.py:1047-1049 via :1210-1212): assign the
     * new batch to the EXISTING centroids and append to the partitioned
     * assignments table — inverted lists grow in place, no rebuild, and
-    * the appended files partition-prune exactly like the originals. */
-  def addToIndex(newVectors: DataFrame, centroids: Array[Centroid], dir: String): Unit =
-    assign(newVectors, centroids).write.mode("append")
-      .partitionBy("cluster_id").parquet(s"$dir/assignments")
+    * the appended files partition-prune exactly like the originals. The
+    * batch rebalances by cluster_id like [[writeIndex]], so an add writes
+    * about one file per touched list instead of one per task and list.
+    * The manifest is unchanged (no row count is kept for IVF). */
+  def addToIndex(newVectors: DataFrame, centroids: Array[Centroid], dir: String): Unit = {
+    IndexManifest.read(newVectors.sparkSession, dir, Family)
+    writeLists(assign(newVectors, centroids), dir, "append")
+  }
 
   /** `index.remove_ids` analog (FAISS `IndexIVF.remove_ids`): drop a set
     * of vector ids from the inverted lists. Relationally a broadcast
@@ -294,13 +311,17 @@ object IvfIndex {
         sum(when(!col("in_new"), 1L).otherwise(0L)).as("n_removed"))
   }
 
-  /** S3 — load a persisted index. */
+  /** S3 — load a persisted index: both tables open with their recorded
+    * schemas, and the nlist centroid rows sort on the driver — one
+    * collect job, plus Spark's parallel listing job when the lists span
+    * more directories than its discovery threshold. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String): (Array[Centroid], DataFrame) = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("cid"))
+    val m = IndexManifest.read(spark, dir, Family)
+    val cents = m.table(spark, dir, "centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    (cents, spark.read.parquet(s"$dir/assignments"))
+      .sortBy(_._1)
+    (cents, m.table(spark, dir, "assignments"))
   }
 
   /** Search against a persisted index with static partition pruning: the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.sources.{IncompleteIndexException, IndexManifest}
 
 /** Early-terminating exact top-k over an impact-ordered inverted index —
   * Fagin's Threshold Algorithm (Fagin, Lotem & Naor 2001), the classic
@@ -213,12 +214,13 @@ object SparseTopK {
     * clamped to [16, 4096]. A fixed bucket count makes the per-serve
     * scan grow LINEARLY in corpus size (each bucket holds 1/buckets of
     * every posting) — the r12/r13 scaling decades measured exactly that
-    * tail on the persisted TA serve. The chosen count rides in
-    * `path/_ta_meta.json` and [[taTopKPersisted]] reads it by name, so
+    * tail on the persisted TA serve. The chosen count rides in the
+    * index manifest ([[IndexManifest]], with the posting total and both
+    * tables' schemas, written LAST) and [[taTopKPersisted]] reads it, so
     * no caller carries the knob. Two sidecar artifacts (underscore
     * prefix — invisible to the data scan's partition discovery):
     *
-    *   - `_ta_meta.json` — {num_buckets, total_postings};
+    *   - `_graft_manifest.json` — the commit record;
     *   - `_termstats`    — per-term list length + the exact impact at
     *     every power-of-two rank (≤ ~log₂(len) rows of ladder per
     *     term), partitioned by the same term-hash bucket. This is the
@@ -229,6 +231,7 @@ object SparseTopK {
   def writeIndex(index: DataFrame, path: String, numBuckets: Int = 0,
       targetPostingsPerBucket: Long = 500000L): Unit = {
     val spark = index.sparkSession
+    IndexManifest.delete(spark, path)
     // one build-time materialization: the bucket count needs the total
     // posting count, and the nodes write + termstats aggregate both
     // re-read the index — persist once, three consumers, unpersist
@@ -252,9 +255,9 @@ object SparseTopK {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
+      val nodes = idx.withColumn("bucket", bucket)
       val nodesF = Future {
-        idx
-          .withColumn("bucket", bucket)
+        nodes
           .repartition(col("bucket"))
           .sortWithinPartitions(col("term"), col("impact_rank"))
           .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -269,14 +272,15 @@ object SparseTopK {
       // it concurrently would race that delete) and renamed into place
       // once both jobs commit.
       val statsTmp = s"${path}__termstats_tmp"
+      val stats = idx.groupBy(col("term"))
+        .agg(max(col("impact_rank")).as("len"),
+          sort_array(collect_list(when(
+            col("impact_rank").bitwiseAND(col("impact_rank") - 1) === 0L,
+            struct(col("impact_rank").as("r"), col("impact").as("impact")))))
+            .as("ladder"))
+        .withColumn("bucket", bucket)
       val statsF = Future {
-        idx.groupBy(col("term"))
-          .agg(max(col("impact_rank")).as("len"),
-            sort_array(collect_list(when(
-              col("impact_rank").bitwiseAND(col("impact_rank") - 1) === 0L,
-              struct(col("impact_rank").as("r"), col("impact").as("impact")))))
-              .as("ladder"))
-          .withColumn("bucket", bucket)
+        stats
           .repartition(col("bucket"))
           .sortWithinPartitions(col("term"))
           .write.partitionBy("bucket").mode("overwrite").parquet(statsTmp)
@@ -285,42 +289,43 @@ object SparseTopK {
       Await.result(statsF, Duration.Inf)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.rename(new org.apache.hadoop.fs.Path(statsTmp),
-        new org.apache.hadoop.fs.Path(s"$path/_termstats"))
-      writeTaMeta(spark, path, nb, total)
+      if (!fs.rename(new org.apache.hadoop.fs.Path(statsTmp),
+          new org.apache.hadoop.fs.Path(s"$path/_termstats")))
+        throw new IncompleteIndexException(path,
+          s"rename of $statsTmp to $path/_termstats failed")
+      val bucketCol = Some("bucket" -> (nb - 1L))
+      IndexManifest.write(spark, path, IndexManifest(Family,
+        numBuckets = Some(nb), totalPostings = Some(total),
+        tables = Map(
+          IndexManifest.Root -> IndexManifest.writtenSchema(nodes, bucketCol),
+          "_termstats" -> IndexManifest.writtenSchema(stats, bucketCol))))
     } finally idx.unpersist(blocking = false)
   }
 
-  /** The serve-time index descriptor: bucket count + total postings. */
-  final case class TaIndexMeta(numBuckets: Int, totalPostings: Long)
+  private val Family = "ta"
 
-  private def writeTaMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, numBuckets: Int, totalPostings: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_ta_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"num_buckets":$numBuckets,"total_postings":$totalPostings}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The committed manifest of a persisted impact index. */
+  private[graft] def manifest(spark: org.apache.spark.sql.SparkSession,
+      path: String): IndexManifest = IndexManifest.read(spark, path, Family)
 
-  /** None for indexes written before the sidecar existed (pre-r14) —
-    * those serve with the caller's `numBuckets` and the aggregate-tails
-    * loop, the old behavior. */
-  private[graft] def readTaMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[TaIndexMeta] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_ta_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val re = """"num_buckets"\s*:\s*(\d+).*"total_postings"\s*:\s*(\d+)""".r
-      re.findFirstMatchIn(s).map(m => TaIndexMeta(m.group(1).toInt, m.group(2).toLong))
-    }
-  }
+  /** The persisted impact index's postings table, opened with its
+    * recorded schema (no footer-inference job). */
+  def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    manifest(spark, path).table(spark, path, IndexManifest.Root)
+
+  /** The stored `_termstats` tails of `terms` — ≤ |terms| control-plane
+    * rows, read from the terms' bucket directories only. */
+  private def storedTails(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexManifest, buckets: Seq[Long], terms: Seq[String]): Seq[TermTail] =
+    m.table(spark, path, "_termstats")
+      .where(col("bucket").isin(buckets: _*))
+      .where(col("term").isin(terms: _*))
+      .select(col("term"), col("len"), col("ladder"))
+      .collect().toSeq.map { r =>
+        TermTail(r.getAs[String]("term"), r.getAs[Long]("len"),
+          r.getSeq[org.apache.spark.sql.Row](2)
+            .map(s => s.getAs[Long]("r") -> s.getAs[Double]("impact")).toMap)
+      }
 
   /** The serve-time bucket of a term, evaluated DRIVER-SIDE through
     * Spark's own `XxHash64` expression (not a re-implementation — the
@@ -370,118 +375,102 @@ object SparseTopK {
   private[graft] def HeadModeMaxFrac: Double =
     sys.props.get("graft.ta.headMaxFrac").map(_.toDouble).getOrElse(0.5)
 
-  /** TA over a persisted index: bucket the query terms driver-side and
-    * read only those partitions — result identical to the in-memory
-    * form (same oracle). `numBuckets` is a FALLBACK for pre-r14 indexes
-    * without `_ta_meta.json`; indexes carrying the sidecar serve with
-    * their stored bucket count and the `_termstats` tails (no per-serve
-    * tails aggregate over the query postings). */
+  /** TA over a persisted index: bucket the query terms driver-side with
+    * the stored bucket count and read only those partitions — result
+    * identical to the in-memory form (same oracle). The ladder walk's
+    * per-term (len, impact-at-rung) rows come from the `_termstats`
+    * sidecar — ≤ |terms| control-plane rows — instead of a grouped
+    * aggregate over every query posting. Rungs are the stored powers of
+    * two ≥ k; every rung impact is EXACT, so the stopping certificate
+    * and the final-job regime switch are the in-memory loop's verbatim
+    * (rows identical at any terminating depth — only the audited depth
+    * can differ). */
   def taTopKPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
-      queryTerms: Seq[String], k: Int, numBuckets: Int = 16): DataFrame = {
-    val meta = readTaMeta(spark, path)
-    val nb = meta.map(_.numBuckets).getOrElse(numBuckets)
+      queryTerms: Seq[String], k: Int): DataFrame = {
+    val m = manifest(spark, path)
     val qts = queryTerms.distinct
-    val bucketOf = qts.map(bucketOfTerm(_, nb)).distinct
-    val idx = spark.read.parquet(path)
+    val bucketOf = qts.map(bucketOfTerm(_, m.numBuckets.get)).distinct
+    val idx = m.table(spark, path, IndexManifest.Root)
       .where(col("bucket").isin(bucketOf: _*))
-    if (meta.isEmpty) taTopK(idx, queryTerms, k)
+    val tails = storedTails(spark, path, m, bucketOf, qts)
+    val start = java.lang.Long.highestOneBit(math.max(1L, 2L * k - 1))
+    val ladder = Iterator.iterate(start)(d => math.min(d * 2L, Long.MaxValue / 2))
+      .take(64).toSeq.distinct
+    val dict = termDict(qts)
+    // small-serve gate (r15): the stored lens say EXACTLY how big the
+    // working set is before any corpus job runs. Small sets skip the
+    // materialization job AND the seed job — one exhaustive-bypass
+    // final job reads the pruned parquet directly (the bucket
+    // PartitionFilters + term pushdown then sit in the SERVE plan
+    // itself — the r14 dossier gap); big sets keep the checkpoint
+    // that kills the 1000× re-scan term and the seed that powers the
+    // early stop.
+    val postings = tails.map(_.len).sum
+    val small = postings < SmallServeFloorPostings
+    val qpLazy = withTermIds(idx.where(col("term").isin(qts: _*)), dict)
+    if (small)
+      taLoopCore(qpLazy, k,
+        scala.concurrent.Future.successful(tails), ladder, dict,
+        skipSeed = true)._1
     else {
-      // stored-tails serve: the ladder walk's per-term (len, impact-at-
-      // rung) rows come from the _termstats sidecar — ≤ |terms| control-
-      // plane rows — instead of a grouped aggregate over every query
-      // posting. Rungs are the stored powers of two ≥ k; every rung
-      // impact is EXACT, so the stopping certificate and the final-job
-      // regime switch are the in-memory loop's verbatim (rows identical
-      // at any terminating depth — only the audited depth can differ).
-      val statRows = spark.read.parquet(s"$path/_termstats")
-        .where(col("bucket").isin(bucketOf: _*))
-        .where(col("term").isin(qts: _*))
-        .select(col("term"), col("len"), col("ladder"))
+      // deep-serve block prune (r15, VERDICT item 3 via the stored
+      // ladder + the sorted files' row-group stats). The seed job
+      // runs FIRST, candidate-bounded over the LAZY scan — the
+      // depth-r0 prefix docs semi-join the full pruned read, so the
+      // exact θ_seed costs one pass with no materialization. The
+      // stored rung impacts then make the ladder walk DRIVER
+      // ARITHMETIC: p* = first rung with τ(rung) < θ_seed − 1e-9 is
+      // the walk's terminating depth, known BEFORE the working set is
+      // built. The checkpoint then materializes only the
+      // impact_rank ≤ p* head (row-group-pruned off the sorted
+      // files), and the deep tail is read lazily exactly once,
+      // candidate-bounded, inside the final scoring job (taLoopCore's
+      // `fullPostings`). Scores fold over the identical posting
+      // multiset, so rows are bit-identical; only the materialized
+      // volume changes (the 19.4M-row r13 working-set term at 1000×
+      // drops to its p*/len head — measured 25 % on the scale
+      // fixture). Weaker driver-only bounds were tried and never
+      // fired on slow-decay corpora: prefix-partial scores miss the
+      // deep cross-term contributions that dominate θ there (measured
+      // θ_partial 0.515 vs θ_seed ≈ 2.4 at 1000×).
+      def tauOf(p: Long): Double =
+        tails.collect { case t if t.len >= p => t.atRank(p) }.sum
+      val r0 = ladder.head // first rung ≥ k by construction
+      val seedRows = qpLazy
+        .join(qpLazy.where(col("impact_rank") <= r0)
+          .select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .groupBy(col("doc_id"))
+        .agg(aggregate(
+          array_sort(collect_list(struct(col("term"), col("impact")))),
+          lit(0.0),
+          (acc, s) => acc + s.getField("impact")).as("score"))
+        .orderBy(col("score").desc, col("doc_id")).limit(k)
         .collect()
-      val tails = statRows.toSeq.map { r =>
-        TermTail(r.getAs[String]("term"), r.getAs[Long]("len"),
-          r.getSeq[org.apache.spark.sql.Row](2)
-            .map(s => s.getAs[Long]("r") -> s.getAs[Double]("impact")).toMap)
-      }
-      val start = java.lang.Long.highestOneBit(math.max(1L, 2L * k - 1))
-      val ladder = Iterator.iterate(start)(d => math.min(d * 2L, Long.MaxValue / 2))
-        .take(64).toSeq.distinct
-      val dict = termDict(qts)
-      // small-serve gate (r15): the stored lens say EXACTLY how big the
-      // working set is before any corpus job runs. Small sets skip the
-      // materialization job AND the seed job — one exhaustive-bypass
-      // final job reads the pruned parquet directly (the bucket
-      // PartitionFilters + term pushdown then sit in the SERVE plan
-      // itself — the r14 dossier gap); big sets keep the checkpoint
-      // that kills the 1000× re-scan term and the seed that powers the
-      // early stop.
-      val postings = tails.map(_.len).sum
-      val small = postings < SmallServeFloorPostings
-      val qpLazy = withTermIds(idx.where(col("term").isin(qts: _*)), dict)
-      if (small)
-        taLoopCore(qpLazy, k,
+      val thetaSeed =
+        if (seedRows.length >= k) seedRows.last.getAs[Double]("score")
+        else Double.NegativeInfinity
+      val pUb =
+        if (thetaSeed.isNegInfinity) None
+        else ladder.find(p => tauOf(p) < thetaSeed - 1e-9)
+      val headRows = pUb.fold(postings)(p => tails.map(t => math.min(t.len, p)).sum)
+      // head mode only when the bound actually slims the
+      // materialization ([[HeadModeMaxFrac]] crossover)
+      val headMode = pUb.isDefined && headRows < postings * HeadModeMaxFrac
+      if (!headMode)
+        // full-checkpoint path; the exact θ above rides in so the
+        // loop's own seed job is skipped (same job count as r14)
+        taLoopCore(qpLazy.localCheckpoint(true), k,
           scala.concurrent.Future.successful(tails), ladder, dict,
-          skipSeed = true)._1
+          thetaPre = Some(thetaSeed))._1
       else {
-        // deep-serve block prune (r15, VERDICT item 3 via the stored
-        // ladder + the sorted files' row-group stats). The seed job
-        // runs FIRST, candidate-bounded over the LAZY scan — the
-        // depth-r0 prefix docs semi-join the full pruned read, so the
-        // exact θ_seed costs one pass with no materialization. The
-        // stored rung impacts then make the ladder walk DRIVER
-        // ARITHMETIC: p* = first rung with τ(rung) < θ_seed − 1e-9 is
-        // the walk's terminating depth, known BEFORE the working set is
-        // built. The checkpoint then materializes only the
-        // impact_rank ≤ p* head (row-group-pruned off the sorted
-        // files), and the deep tail is read lazily exactly once,
-        // candidate-bounded, inside the final scoring job (taLoopCore's
-        // `fullPostings`). Scores fold over the identical posting
-        // multiset, so rows are bit-identical; only the materialized
-        // volume changes (the 19.4M-row r13 working-set term at 1000×
-        // drops to its p*/len head — measured 25 % on the scale
-        // fixture). Weaker driver-only bounds were tried and never
-        // fired on slow-decay corpora: prefix-partial scores miss the
-        // deep cross-term contributions that dominate θ there (measured
-        // θ_partial 0.515 vs θ_seed ≈ 2.4 at 1000×).
-        def tauOf(p: Long): Double =
-          tails.collect { case t if t.len >= p => t.atRank(p) }.sum
-        val r0 = ladder.head // first rung ≥ k by construction
-        val seedRows = qpLazy
-          .join(qpLazy.where(col("impact_rank") <= r0)
-            .select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .groupBy(col("doc_id"))
-          .agg(aggregate(
-            array_sort(collect_list(struct(col("term"), col("impact")))),
-            lit(0.0),
-            (acc, s) => acc + s.getField("impact")).as("score"))
-          .orderBy(col("score").desc, col("doc_id")).limit(k)
-          .collect()
-        val thetaSeed =
-          if (seedRows.length >= k) seedRows.last.getAs[Double]("score")
-          else Double.NegativeInfinity
-        val pUb =
-          if (thetaSeed.isNegInfinity) None
-          else ladder.find(p => tauOf(p) < thetaSeed - 1e-9)
-        val headRows = pUb.fold(postings)(p => tails.map(t => math.min(t.len, p)).sum)
-        // head mode only when the bound actually slims the
-        // materialization ([[HeadModeMaxFrac]] crossover)
-        val headMode = pUb.isDefined && headRows < postings * HeadModeMaxFrac
-        if (!headMode)
-          // full-checkpoint path; the exact θ above rides in so the
-          // loop's own seed job is skipped (same job count as r14)
-          taLoopCore(qpLazy.localCheckpoint(true), k,
-            scala.concurrent.Future.successful(tails), ladder, dict,
-            thetaPre = Some(thetaSeed))._1
-        else {
-          val head = withTermIds(
-            idx.where(col("term").isin(qts: _*) &&
-              col("impact_rank") <= pUb.get), dict).localCheckpoint(true)
-          taLoopCore(head, k,
-            scala.concurrent.Future.successful(tails),
-            ladder.takeWhile(_ <= pUb.get), dict,
-            fullPostings = Some(qpLazy),
-            thetaPre = Some(thetaSeed))._1
-        }
+        val head = withTermIds(
+          idx.where(col("term").isin(qts: _*) &&
+            col("impact_rank") <= pUb.get), dict).localCheckpoint(true)
+        taLoopCore(head, k,
+          scala.concurrent.Future.successful(tails),
+          ladder.takeWhile(_ <= pUb.get), dict,
+          fullPostings = Some(qpLazy),
+          thetaPre = Some(thetaSeed))._1
       }
     }
   }
@@ -517,8 +506,8 @@ object SparseTopK {
 
   /** Batch TA over a persisted index (r14): the batch twin of
     * [[taTopKPersisted]]. Bucket-prunes the scan to the batch's terms
-    * (the pre-r14 batch query read ALL bucket directories) and, when
-    * the index carries the `_termstats` sidecar, eliminates the
+    * (the pre-r14 batch query read ALL bucket directories) and, from
+    * the `_termstats` sidecar, eliminates the
     * per-serve tails aggregate outright — per-term tails are
     * query-independent, so the batch's (query, term) tail rows are the
     * stored per-term rows fanned out over the collected query pairs
@@ -526,12 +515,10 @@ object SparseTopK {
     * [[taTopKBatch]] over the same index read: TA's certificate holds
     * per query at any terminating rung sequence, and both final-job
     * branches are row-identical by construction — only the audited
-    * depth can differ. `numBuckets` is the pre-sidecar fallback. */
+    * depth can differ. */
   def taTopKBatchPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String, queryTerms: DataFrame, k: Int,
-      numBuckets: Int = 16): DataFrame = {
-    val meta = readTaMeta(spark, path)
-    val nb = meta.map(_.numBuckets).getOrElse(numBuckets)
+      path: String, queryTerms: DataFrame, k: Int): DataFrame = {
+    val m = manifest(spark, path)
     // ZERO control-plane jobs for terms + buckets (r15; the r14 form
     // paid one distinct+collect job — each extra local job is ~0.1 s of
     // scheduler latency at suite scale): the micro-batch query table
@@ -542,24 +529,12 @@ object SparseTopK {
     val qPairs = queryTerms.select(col("query_id").cast("long"), col("term"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.distinct
     val terms = qPairs.map(_._2).distinct
-    val bucketOf = terms.map(bucketOfTerm(_, nb)).distinct
-    val idx = spark.read.parquet(path)
+    val bucketOf = terms.map(bucketOfTerm(_, m.numBuckets.get)).distinct
+    val idx = m.table(spark, path, IndexManifest.Root)
       .where(col("bucket").isin(bucketOf: _*))
-    if (meta.isEmpty) taTopKBatch(idx, queryTerms, k)
-    else {
-      val statRows = spark.read.parquet(s"$path/_termstats")
-        .where(col("bucket").isin(bucketOf: _*))
-        .where(col("term").isin(terms: _*))
-        .select(col("term"), col("len"), col("ladder"))
-        .collect()
-      val tails = statRows.toSeq.map { r =>
-        TermTail(r.getAs[String]("term"), r.getAs[Long]("len"),
-          r.getSeq[org.apache.spark.sql.Row](2)
-            .map(s => s.getAs[Long]("r") -> s.getAs[Double]("impact")).toMap)
-      }
-      taTopKBatchCore(idx, queryTerms, k, storedTails = Some(tails),
-        precollectedPairs = Some(qPairs))._1
-    }
+    taTopKBatchCore(idx, queryTerms, k,
+      storedTails = Some(storedTails(spark, path, m, bucketOf, terms)),
+      precollectedPairs = Some(qPairs))._1
   }
 
   /** Per-(query, term) tail state of the batch walk — the batched

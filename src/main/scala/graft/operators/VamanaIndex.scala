@@ -6,6 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexManifest
+
 /** Vamana / DiskANN ANN — per-shard single-layer pruned graphs
   * (Subramanya et al., "DiskANN: Fast Accurate Billion-point Nearest
   * Neighbor Search on a Single Node", NeurIPS 2019).
@@ -461,8 +463,10 @@ object VamanaIndex {
   // position in the sorted-vec_id build order and `medoid_seq` the
   // shard's entry point (constant within a shard — one int next to a
   // d-float vector, cheaper than a second build pass or a per-shard meta
-  // join) — written partitionBy(part_id), plus a one-row meta table with
-  // the build params.
+  // join) — written partitionBy(part_id), plus the index manifest with
+  // the build params ([[IndexManifest]]).
+
+  private val Family = "vamana"
 
   /** One serialized graph node (single layer — no level column). */
   case class VamanaNode(part_id: Int, seq: Int, vec_id: Long,
@@ -488,8 +492,10 @@ object VamanaIndex {
 
   /** S4 — build per-shard graphs exactly as [[selfSearch]] does (same
     * mod routing, same sorted build order ⇒ bit-identical graphs) and
-    * persist: `dir/nodes` partitioned by part_id, `dir/meta` carrying
-    * the build params + shard count. */
+    * persist: `dir/nodes` partitioned by part_id, then the manifest
+    * carrying the build params + shard count, the row count, dimension
+    * and near-dup multiplicity, and the nodes schema
+    * ([[FilteredSearchPlanner.graphManifest]]). */
   def writeIndex(
       embeddings: DataFrame,
       dir: String,
@@ -501,61 +507,47 @@ object VamanaIndex {
       if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
     val p = params
-    shardAndBuild(embeddings, parts, p)
+    IndexManifest.delete(spark, dir)
+    val nodes = shardAndBuild(embeddings, parts, p)
       .flatMapGroups { (pid, it) =>
         val graph = new LocalGraph(p)
         graph.build(it.map(t => (t._2, t._3)).toArray)
         graphToRows(graph, pid)
       }
-      .write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    // build-time near-dup multiplicity for the k·m filtered-beam floor
-    // (r12 verdict item 1) — the [[HnswIndex.writeIndex]] discipline:
-    // memoized per (corpus, seed) in the JVM, with the row count
-    // snapshotted so [[addToIndex]] can refresh a stale estimate (r13
-    // verdict item 3)
-    val dupMult = FilteredSearchPlanner.estimateDupMultiplicityCached(embeddings)
-    val nRows = embeddings.count()
-    Seq((p.r, p.l, p.alpha, parts, dupMult, nRows))
-      .toDF("r", "l", "alpha", "num_partitions", "dup_multiplicity",
-        "rows_at_estimate")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    nodes.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
+    IndexManifest.write(spark, dir, FilteredSearchPlanner.graphManifest(Family,
+      Map("r" -> p.r.toDouble, "l" -> p.l.toDouble, "alpha" -> p.alpha),
+      parts, embeddings, nodes.toDF()))
   }
 
-  /** Stored build params + partition count — the ONE place the meta
-    * schema is parsed (by name, not ordinal — the
-    * [[HnswIndex.readMeta]] contract: adding a meta field can never
-    * silently mis-parse a reader). */
-  private def readMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (Params, Int) = {
-    val r = spark.read.parquet(s"$dir/meta").head()
-    (Params(r.getAs[Int]("r"), r.getAs[Int]("l"), r.getAs[Double]("alpha")),
-     r.getAs[Int]("num_partitions"))
+  /** The committed index's manifest, build params, shard count and nodes
+    * table. */
+  private def open(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (IndexManifest, Params, Int, DataFrame) = {
+    val m = IndexManifest.read(spark, dir, Family)
+    (m, Params(m.param("r").toInt, m.param("l").toInt, m.param("alpha")),
+     m.param("num_partitions").toInt, m.table(spark, dir, "nodes"))
   }
 
-  /** The stored build-time near-dup multiplicity, None for indexes
-    * written before the field existed — the
-    * [[HnswIndex.readDupMultiplicity]] contract. */
-  private[operators] def readDupMultiplicity(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[Double] =
-    IndexMetaCache.cachedDupMultiplicity(spark, s"$dir/meta") {
-      val df = spark.read.parquet(s"$dir/meta")
-      if (df.schema.fieldNames.contains("dup_multiplicity"))
-        Some(df.head().getAs[Double]("dup_multiplicity"))
-      else None
-    }
+  /** The first `numQueries` stored vectors (vec_id pushdown filter). */
+  private def storedQueries(nodes: DataFrame, numQueries: Int): Array[(Long, Array[Float])] = {
+    import nodes.sparkSession.implicits._
+    nodes.where(col("vec_id") < numQueries).as[VamanaNode]
+      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
+  }
 
   /** Shared persisted-search tail: reload every stored graph (direct
     * fill), walk it for the broadcast query batch, A1-merge. */
   private def searchGraphs(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String,
+      nodes: DataFrame,
+      p: Params,
       queries: Array[(Long, Array[Float])],
       k: Int,
       excludeSelf: Boolean): DataFrame = {
+    val spark = nodes.sparkSession
     import spark.implicits._
-    val (p, _) = readMeta(spark, dir)
     val bcQueries = spark.sparkContext.broadcast(queries)
-    val partials = spark.read.parquet(s"$dir/nodes").as[VamanaNode]
+    val partials = nodes.as[VamanaNode]
       .groupByKey(_.part_id)
       .flatMapGroups { (_, it) =>
         val graph = graphFromRows(it.toArray, p)
@@ -577,11 +569,8 @@ object VamanaIndex {
       dir: String,
       numQueries: Int,
       k: Int): DataFrame = {
-    import spark.implicits._
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[VamanaNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    searchGraphs(spark, dir, queries, k, excludeSelf = true)
+    val (_, p, _, nodes) = open(spark, dir)
+    searchGraphs(nodes, p, storedQueries(nodes, numQueries), k, excludeSelf = true)
   }
 
   /** Filtered search SERVED from a once-persisted index — the FAISS
@@ -598,12 +587,9 @@ object VamanaIndex {
     * the exact global answer — same brute-force filtered oracle as the
     * fresh-build form, hash unchanged.
     *
-    * @note BEHAVIOR CHANGE in r13: `dupMultiplicity = None` no longer
-    *   means "fixed caller beam" — on indexes whose meta carries the
-    *   build-time `dup_multiplicity` field (r13+ writes), None OPTS IN
-    *   to the automatic k·m beam floor. Callers that relied on None
-    *   pinning the beam must pass `Some(1.0)` explicitly. Pre-r13
-    *   indexes (no meta field) keep the old fixed-beam behavior. */
+    * @note `dupMultiplicity = None` OPTS IN to the automatic k·m beam
+    *   floor from the build-time estimate in the manifest; pass
+    *   `Some(1.0)` to pin the caller's beam. */
   def selfSearchFilteredPersisted(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -614,23 +600,16 @@ object VamanaIndex {
       selectivity: Option[Double] = None,
       dupMultiplicity: Option[Double] = None): DataFrame = {
     import spark.implicits._
-    val (p, parts) = readMeta(spark, dir)
-    val queries = spark.read.parquet(s"$dir/nodes")
-      .where(col("vec_id") < numQueries).as[VamanaNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val (m, p, parts, nodes) = open(spark, dir)
+    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
     // L ≈ max(L/selectivity, k·dup-multiplicity) — the measured rules
     // (FilteredSearchPlanner.autoBeam). dupMultiplicity = None defaults
-    // to the BUILD-TIME estimate stored in the index meta (r12 verdict
-    // item 1: the floor with no manual knob); pass Some(1.0) to pin the
-    // caller's beam (the exactness pins' Int.MaxValue is a fixed point
-    // either way). Pre-r13 indexes carry no meta field → no floor. A
-    // saturated caller beam skips the meta read outright (the floor is
-    // a mathematical no-op there — ADVICE r13); other callers' reads
-    // memo per (dir, meta mtime).
+    // to the BUILD-TIME estimate stored in the manifest (r12 verdict
+    // item 1: the floor with no manual knob); a saturated caller beam
+    // makes the floor a mathematical no-op (ADVICE r13).
     val mEff =
       if (searchBeam == Int.MaxValue) None
-      else dupMultiplicity.orElse(readDupMultiplicity(spark, dir))
+      else dupMultiplicity.orElse(m.dupMultiplicity)
     val beam = FilteredSearchPlanner.autoBeam(
       searchBeam, selectivity, k, mEff)
     val allowByPart = allowed
@@ -638,7 +617,7 @@ object VamanaIndex {
         col("vec_id"))
       .as[(Int, Long)]
       .groupByKey(_._1)
-    val partials = spark.read.parquet(s"$dir/nodes").as[VamanaNode]
+    val partials = nodes.as[VamanaNode]
       .groupByKey(_.part_id)
       .cogroup(allowByPart) { (_, nodeIt, allowIt) =>
         val rows = nodeIt.toArray
@@ -664,9 +643,10 @@ object VamanaIndex {
   def searchPersisted(queries: DataFrame, dir: String, k: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
+    val (_, p, _, nodes) = open(spark, dir)
     val qs = queries.select(col("query_id"), col("qvec"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    searchGraphs(spark, dir, qs, k, excludeSelf = false)
+    searchGraphs(nodes, p, qs, k, excludeSelf = false)
   }
 
   /** Vamana coarse quantizer — IVF probe selection via one driver-built
@@ -728,20 +708,24 @@ object VamanaIndex {
     * overwrite after an eager localCheckpoint — same
     * read-own-delete-race discipline as the HNSW add). Untouched
     * shards' files never move. Insert-order dependence matches FAISS:
-    * A-then-B ≠ fresh A∪B, deterministically. */
+    * A-then-B ≠ fresh A∪B, deterministically. The manifest then commits
+    * the grown row count ([[FilteredSearchPlanner.commitGraphAdd]]). */
   def addToIndex(newVectors: DataFrame, dir: String): Unit = {
     val spark = newVectors.sparkSession
     import spark.implicits._
-    val (p, parts) = readMeta(spark, dir)
+    val (m, p, parts, nodes) = open(spark, dir)
     val routed = newVectors
       .select(pmod(col("vec_id"), lit(parts)).cast("int").as("part_id"),
         col("vec_id"), col("embedding"))
     val touched = routed.select(col("part_id")).distinct()
       .collect().map(_.getInt(0))
-    val existing = spark.read.parquet(s"$dir/nodes").as[VamanaNode]
+    val existing = nodes.as[VamanaNode]
       .filter(col("part_id").isin(touched.map(Int.box): _*))
       .groupByKey(_.part_id)
     val adds = routed.as[(Int, Long, Array[Float])].groupByKey(_._1)
+    // exact: the cogroup runs once per shard, in the checkpoint job's
+    // result stage
+    val inserted = spark.sparkContext.longAccumulator
     val rewritten = existing.cogroup(adds) { (pid, oldIt, newIt) =>
       val graph = graphFromRows(oldIt.toArray, p)
       // idempotent by id: a batch replayed after a crash in the
@@ -750,8 +734,9 @@ object VamanaIndex {
       // already holds — skipping them makes the replay a no-op
       // instead of a duplicate-node insert
       val have = graph.ids.toSet
-      newIt.toArray.sortBy(_._2)
-        .foreach { case (_, id, v) => if (!have.contains(id)) graph.insertPoint(id, v) }
+      newIt.toArray.sortBy(_._2).foreach { case (_, id, v) =>
+        if (!have.contains(id)) { graph.insertPoint(id, v); inserted.add(1L) }
+      }
       graphToRows(graph, pid)
     }.localCheckpoint(true)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -765,35 +750,6 @@ object VamanaIndex {
       }
       rewritten.unpersist(blocking = false)
     }
-    refreshDupMultiplicity(spark, dir)
-  }
-
-  /** The [[HnswIndex.addToIndex]] refresh discipline for the Vamana
-    * meta (r13 verdict item 3): once incremental adds grow the index
-    * past the growth threshold of the estimate's row snapshot, re-run
-    * the one-pass multiplicity estimator over the stored vectors and
-    * rewrite the meta. See the Hnsw twin for the full rationale. */
-  private val DupEstimateRefreshGrowth = 1.1
-
-  private def refreshDupMultiplicity(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val metaDf = spark.read.parquet(s"$dir/meta")
-    val fields = metaDf.schema.fieldNames.toSet
-    if (!fields.contains("dup_multiplicity")) return
-    val r = metaDf.head()
-    val rowsAt =
-      if (fields.contains("rows_at_estimate")) r.getAs[Long]("rows_at_estimate")
-      else 0L // r13 meta: no snapshot recorded — refresh on the first add
-    val total = spark.read.parquet(s"$dir/nodes").count()
-    if (total.toDouble < rowsAt * DupEstimateRefreshGrowth) return
-    val dupMult = FilteredSearchPlanner.estimateDupMultiplicity(
-      spark.read.parquet(s"$dir/nodes")
-        .select(col("vec_id"), col("vec").as("embedding")))
-    Seq((r.getAs[Int]("r"), r.getAs[Int]("l"), r.getAs[Double]("alpha"),
-        r.getAs[Int]("num_partitions"), dupMult, total))
-      .toDF("r", "l", "alpha", "num_partitions", "dup_multiplicity",
-        "rows_at_estimate")
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    FilteredSearchPlanner.commitGraphAdd(spark, dir, m, inserted.value)
   }
 }

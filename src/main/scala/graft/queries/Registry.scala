@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Distances, Fingerprint, TextFunctions}
 import graft.operators._
+import graft.sources.IndexManifest
 
 /** Named-query registry binding operators to the driver's test tables.
   *
@@ -1622,12 +1623,12 @@ object Registry {
     // top-10, and the shared oracle checks both.
     "q_bm25_batch" -> ((s, dir) => {
       val idxDir = tmpIndexDir("graft_ta_idx", dir)
-      if (!new java.io.File(s"$idxDir/_SUCCESS").exists()) {
+      if (!IndexManifest.exists(s, idxDir)) {
         SparseTopK.writeIndex(
           SparseTopK.buildImpactIndex(t(s, dir, "documents")), idxDir)
       }
       import s.implicits._
-      Bm25.rankBatchFromIndex(s.read.parquet(idxDir),
+      Bm25.rankBatchFromIndex(SparseTopK.readIndex(s, idxDir),
           taBatchQueryTerms.toDF("query_id", "term"), topN = 10)
         .withColumn("score", round(col("score"), 6))
     }),
@@ -1663,7 +1664,7 @@ object Registry {
     // corpus-side job per serve.
     "q_ta_batch" -> ((s, dir) => {
       val idxDir = tmpIndexDir("graft_ta_idx", dir)
-      if (!new java.io.File(s"$idxDir/_SUCCESS").exists()) {
+      if (!IndexManifest.exists(s, idxDir)) {
         SparseTopK.writeIndex(
           SparseTopK.buildImpactIndex(t(s, dir, "documents")), idxDir)
       }
@@ -1681,7 +1682,7 @@ object Registry {
       // build once per JVM (the scratch path is proc-scoped and the data
       // dir is immutable): this query times the pruned-read SERVE path —
       // the build side is q_ta_topk's benchmark
-      if (!new java.io.File(s"$idxDir/_SUCCESS").exists()) {
+      if (!IndexManifest.exists(s, idxDir)) {
         SparseTopK.writeIndex(
           SparseTopK.buildImpactIndex(t(s, dir, "documents")), idxDir)
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.IndexManifest
 
 /** Production-beam FILTERED graph-search recall gate — the number
   * q_filtered_recall reports per round (there the sf0.01 shards are
@@ -125,8 +126,8 @@ class FilteredRecallSpec extends SparkSpec {
     // and the build-time estimate must recover the fixture's true
     // multiplicity (jitter splits a single full-width SimHash — the
     // banded+CC estimator exists exactly so this assert holds)
-    val storedV = VamanaIndex.readDupMultiplicity(spark, vamanaDir)
-    val storedH = HnswIndex.readDupMultiplicity(spark, hnswDir)
+    val storedV = IndexManifest.read(spark, vamanaDir, "vamana").dupMultiplicity
+    val storedH = IndexManifest.read(spark, hnswDir, "hnsw").dupMultiplicity
     info(f"stored dup_multiplicity: vamana=${storedV.getOrElse(-1.0)}%.2f hnsw=${storedH.getOrElse(-1.0)}%.2f (fixture m=$mult)")
     assert(storedV.isDefined && storedH.isDefined,
       "writeIndex must persist the build-time multiplicity estimate")
@@ -146,7 +147,7 @@ class FilteredRecallSpec extends SparkSpec {
     val mult = 64
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_filtrec_add_vamana"
     VamanaIndex.writeIndex(emb, dir, numPartitions = 1)
-    val before = VamanaIndex.readDupMultiplicity(spark, dir).get
+    val before = IndexManifest.read(spark, dir, "vamana").dupMultiplicity.get
     assert(before < 4.0, s"unique corpus should estimate near 1 (got $before)")
     // the added batch: 63 jittered replicas of base rows 0..59 — base
     // row 0 (replica 0) is already in the index, so after the add the
@@ -162,7 +163,7 @@ class FilteredRecallSpec extends SparkSpec {
           }
       }.toDF("vec_id", "embedding", "label")
     VamanaIndex.addToIndex(added.select($"vec_id", $"embedding"), dir)
-    val after = VamanaIndex.readDupMultiplicity(spark, dir).get
+    val after = IndexManifest.read(spark, dir, "vamana").dupMultiplicity.get
     info(f"stored dup_multiplicity before=$before%.2f after=$after%.2f (batch m=$mult)")
     assert(after >= 4 * before && after >= 8.0,
       s"addToIndex did not refresh the stale estimate ($before -> $after)")
@@ -216,7 +217,7 @@ class FilteredRecallSpec extends SparkSpec {
     val vamanaDir = s"${System.getProperty("java.io.tmpdir")}/graft_filtrec_meta_vamana"
     HnswIndex.writeIndex(repl, hnswDir, numPartitions = 1)
     VamanaIndex.writeIndex(repl, vamanaDir, numPartitions = 1)
-    val storedV = VamanaIndex.readDupMultiplicity(spark, vamanaDir)
+    val storedV = IndexManifest.read(spark, vamanaDir, "vamana").dupMultiplicity
     info(f"stored dup_multiplicity=${storedV.getOrElse(-1.0)}%.2f (fixture m=$mult)")
     assert(storedV.exists(m => m >= mult * 0.25 && m <= mult * 2.0),
       s"stored multiplicity ${storedV} should track the fixture's m=$mult")

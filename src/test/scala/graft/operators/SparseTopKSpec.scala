@@ -58,7 +58,7 @@ class SparseTopKSpec extends SparkSpec {
     SparseTopK.writeIndex(index, dir, numBuckets = 8)
     val terms = Seq("merge", "vector", "batch", "slow", "spark")
     val mem = SparseTopK.taTopK(index, terms, 15).collect().map(_.toSeq).toSeq
-    val per = SparseTopK.taTopKPersisted(spark, dir, terms, 15, numBuckets = 8)
+    val per = SparseTopK.taTopKPersisted(spark, dir, terms, 15)
       .collect().map(_.toSeq).toSeq
     assert(per == mem)
   }
@@ -68,18 +68,18 @@ class SparseTopKSpec extends SparkSpec {
     val dir16 = java.nio.file.Files.createTempDirectory("taidx_auto").toString
     SparseTopK.writeIndex(index, dir16)
     val total = index.count()
-    val m16 = SparseTopK.readTaMeta(spark, dir16).get
-    assert(m16.numBuckets == 16 && m16.totalPostings == total)
+    val m16 = SparseTopK.manifest(spark, dir16)
+    assert(m16.numBuckets.contains(16) && m16.totalPostings.contains(total))
     // a tiny per-bucket target forces the rule past the floor: buckets
     // must be the next power of two ≥ postings/target (clamped), the
     // meta must carry it, and the serve — given NO bucket knob — must
     // still match the in-memory walk row-for-row
     val dirN = java.nio.file.Files.createTempDirectory("taidx_scaled").toString
     SparseTopK.writeIndex(index, dirN, targetPostingsPerBucket = 50L)
-    val mN = SparseTopK.readTaMeta(spark, dirN).get
-    assert(mN.numBuckets > 16, s"rule did not scale: ${mN.numBuckets}")
-    assert(Integer.bitCount(mN.numBuckets) == 1, "bucket count must be a power of two")
-    assert(mN.numBuckets >= (total + 49) / 50 && mN.numBuckets <= 4096)
+    val nbN = SparseTopK.manifest(spark, dirN).numBuckets.get
+    assert(nbN > 16, s"rule did not scale: $nbN")
+    assert(Integer.bitCount(nbN) == 1, "bucket count must be a power of two")
+    assert(nbN >= (total + 49) / 50 && nbN <= 4096)
     val terms = Seq("merge", "vector", "batch", "slow", "spark")
     val mem = SparseTopK.taTopK(index, terms, 15).collect().map(_.toSeq).toSeq
     val per = SparseTopK.taTopKPersisted(spark, dirN, terms, 15)
