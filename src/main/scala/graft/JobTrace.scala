@@ -29,38 +29,18 @@ object JobTrace {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    final case class Job(id: Int, start: Long, var end: Long = -1L,
-        var stages: Int = 0, var tasks: Int = 0, desc: String = "")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.put(e.jobId, Job(e.jobId, e.time,
-          desc = Option(e.properties.getProperty("spark.job.description")).getOrElse("")))
-        order.add(e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId); if (j != null) j.end = e.time
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        // attribute to the most recent unfinished job (single-query serial driver)
-        val it = order.iterator()
-        var last: Job = null
-        while (it.hasNext) { val j = jobs.get(it.next()); if (j != null && j.end < 0) last = j }
-        if (last != null) { last.stages += 1; last.tasks += e.stageInfo.numTasks }
-      }
-    })
+    val trace = new Listener
+    spark.sparkContext.addSparkListener(trace)
 
     val fn = SparkEntry.queries(name)
     for (i <- 1 to reps) {
       System.gc()
-      jobs.clear(); order.clear()
+      trace.clear()
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(200) // let listener events drain
-      import scala.jdk.CollectionConverters._
-      val js = order.asScala.toSeq.distinct.flatMap(id => Option(jobs.get(id)))
+      val js = trace.jobs
       println(f"RUN$i%d $name%s: $dt%.3f s, ${js.size}%d jobs")
       js.foreach { j =>
         val d = if (j.end >= 0) (j.end - j.start) / 1000.0 else -1.0
@@ -68,5 +48,42 @@ object JobTrace {
       }
     }
     spark.stop()
+  }
+
+  /** One traced job: start/end times and the stages and tasks it ran. */
+  final case class Job(id: Int, start: Long, @volatile var end: Long = -1L,
+      @volatile var stages: Int = 0, @volatile var tasks: Int = 0, desc: String = "")
+
+  /** Records every job with the stages and tasks it ran. A completed
+    * stage is credited to the job whose `SparkListenerJobStart` listed
+    * it (stageId → job, from its `stageInfos`), so jobs that run
+    * concurrently — from Futures, say — are attributed correctly. A
+    * stage that several jobs list belongs to the first; the later jobs
+    * skip it. */
+  final class Listener extends SparkListener {
+    private val byId = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val job = Job(e.jobId, e.time,
+        desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+      byId.put(e.jobId, job)
+      e.stageInfos.foreach(s => stageJob.putIfAbsent(s.stageId, job))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      val j = byId.get(e.jobId); if (j != null) j.end = e.time
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val j = stageJob.get(e.stageInfo.stageId)
+      if (j != null) { j.stages += 1; j.tasks += e.stageInfo.numTasks }
+    }
+
+    /** The jobs seen since the last [[clear]], in start (= id) order. */
+    def jobs: Seq[Job] = {
+      import scala.jdk.CollectionConverters._
+      byId.values.asScala.toSeq.sortBy(_.id)
+    }
+    def clear(): Unit = { byId.clear(); stageJob.clear() }
   }
 }

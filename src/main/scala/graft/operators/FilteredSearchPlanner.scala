@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.IndexManifest
-
 /** Selectivity-based filtered-search planning — the cardinality rule
   * production filtered-ANN engines apply per query (Qdrant's cardinality
   * estimator picks payload-filtered brute scan vs graph walk; ACORN
@@ -155,7 +153,7 @@ object FilteredSearchPlanner {
     * LocalRelation's canonical form does not include its DATA, so two
     * different in-memory corpora with one schema would falsely share an
     * entry (caught by FilteredRecallSpec's two distinct fixtures).
-    * Incremental-add refreshes ([[commitGraphAdd]]) call the
+    * Incremental-add refreshes ([[GraphIndex.commitGraphAdd]]) call the
     * uncached estimator — their corpus genuinely changed. */
   private val estimateCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
@@ -173,53 +171,6 @@ object FilteredSearchPlanner {
       estimateCache.put(key, v)
       v
     }
-  }
-
-  /** The manifest of a freshly written HNSW or Vamana index. The
-    * corpus's near-dup multiplicity rides in it so filtered serving can
-    * apply the k·m beam floor with no manual knob (r12 verdict item 1),
-    * memoized per (corpus, seed) within the JVM (r13: a rebuild of an
-    * unchanged corpus re-ran the deterministic estimate) and handed the
-    * exact row count and dimension of the one shape aggregate. The row
-    * count snapshots WHEN the estimate was taken, so [[commitGraphAdd]]
-    * can re-estimate once incremental adds outgrow it (r13 verdict
-    * item 3). */
-  private[operators] def graphManifest(family: String, params: Map[String, Double],
-      parts: Int, embeddings: DataFrame, nodes: DataFrame): IndexManifest = {
-    val (n, dim) = shapeOf(embeddings)
-    IndexManifest(family,
-      params = params + ("num_partitions" -> parts.toDouble),
-      rows = Some(n), dim = Some(dim),
-      dupMultiplicity = Some(estimateDupMultiplicityCached(embeddings, shape = Some((n, dim)))),
-      rowsAtEstimate = Some(n),
-      tables = Map("nodes" -> IndexManifest.writtenSchema(nodes, Some("part_id" -> (parts - 1L)))))
-  }
-
-  /** Growth past the estimate's row snapshot that makes a graph add
-    * re-run the estimator (r13 verdict item 3). */
-  private val DupEstimateRefreshGrowth = 1.1
-
-  /** Commit an incremental add to a persisted HNSW or Vamana index: the
-    * manifest's row count grows by exactly the `inserted` vectors the add
-    * stored (no listing or count of the nodes), and once the index has
-    * grown [[DupEstimateRefreshGrowth]] past the snapshot its
-    * `dup_multiplicity` describes, the estimator re-runs UNCACHED over
-    * the index's own stored vectors (the corpus genuinely changed) with
-    * the known n and dim, so only its aggregation chain runs. A
-    * FreshDiskANN-style deployment that streams in a heavily replicated
-    * batch thereby regains the k·m floor within one refresh interval
-    * instead of under-flooring its filtered beams forever. The manifest
-    * is rewritten in place, never deleted, so serves run beside adds. */
-  private[operators] def commitGraphAdd(spark: org.apache.spark.sql.SparkSession,
-      dir: String, m: IndexManifest, inserted: Long): Unit = {
-    val total = m.rows.get + inserted
-    val grown = m.copy(rows = Some(total))
-    IndexManifest.write(spark, dir,
-      if (total.toDouble < m.rowsAtEstimate.get * DupEstimateRefreshGrowth) grown
-      else grown.copy(rowsAtEstimate = Some(total),
-        dupMultiplicity = Some(estimateDupMultiplicity(
-          m.table(spark, dir, "nodes").select(col("vec_id"), col("vec").as("embedding")),
-          shape = Some((total, m.dim.get))))))
   }
 
   /** The measured filtered-beam rule (SCALE.md round-11 ladder, made

@@ -2,8 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.sources.IndexManifest
@@ -46,10 +45,7 @@ object HnswIndex {
     * not just a recall gate. */
   private[graft] def levelOf(id: Long, m: Int): Int = {
     val mL = 1.0 / math.log(m.toDouble max 2.0)
-    var z = id + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z = z ^ (z >>> 31)
+    val z = GraphIndex.splitmix64(id)
     val u = ((z >>> 11).toDouble + 1.0) / (1L << 53).toDouble // (0, 1]
     math.min(math.floor(-math.log(u) * mL).toInt, 24)
   }
@@ -59,7 +55,9 @@ object HnswIndex {
     * IVF centroid set) can broadcast for [[coarseProbes]]; `search` is
     * read-only (per-call visited/heaps), so concurrent task threads may
     * share one broadcast instance. */
-  private[operators] final class LocalGraph(params: Params) extends Serializable {
+  private[operators] final class LocalGraph(params: Params)
+      extends Serializable with GraphIndex.Graph {
+    import GraphIndex.{l2 => dist}
     val ids = mutable.ArrayBuffer.empty[Long]
     val vecs = mutable.ArrayBuffer.empty[Array[Float]]
     // adj(node)(layer) — layer 0 first; node participates in layers 0..level
@@ -73,14 +71,6 @@ object HnswIndex {
     /** Deterministic level — delegates to [[HnswIndex.levelOf]] (shared
       * with the oracle-pinned q_hnsw_levels fingerprint). */
     private def levelOf(id: Long): Int = HnswIndex.levelOf(id, params.m)
-
-    private def dist(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-      s
-    }
 
     /** Greedy single-step descent at `layer`: closest reachable node. */
     private def greedyClosest(q: Array[Float], start: Int, layer: Int): Int = {
@@ -100,6 +90,14 @@ object HnswIndex {
         }
       }
       cur
+    }
+
+    /** Greedy descent from the entry point down to layer `toLevel`. */
+    private def descend(q: Array[Float], toLevel: Int): Int = {
+      var ep = entry
+      var l = maxLevel
+      while (l > toLevel) { ep = greedyClosest(q, ep, l); l -= 1 }
+      ep
     }
 
     /** Beam search within one layer from `entryPoints`: best `ef` nodes
@@ -158,13 +156,8 @@ object HnswIndex {
     }
 
     /** Full search: greedy descent maxLevel→1, beam at layer 0. */
-    def search(q: Array[Float], ef: Int): Seq[(Double, Int)] = {
-      if (entry < 0) return Nil
-      var ep = entry
-      var l = maxLevel
-      while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
-      searchLayer(q, Seq(ep), ef, 0)
-    }
+    def search(q: Array[Float], ef: Int): Seq[(Double, Int)] =
+      if (entry < 0) Nil else searchLayer(q, Seq(descend(q, 0)), ef, 0)
 
     /** Entry-seeded UNFILTERED walk — the exhaustive-read contract of
       * [[searchFiltered]] without the predicate closure: layer 0 is
@@ -173,13 +166,7 @@ object HnswIndex {
       * stop can never fire while result.size < ef) visits every node
       * and returns the EXACT top-ef. The hot loop stays the closure-free
       * `allow = null` path of [[search]]. */
-    def searchSeeded(q: Array[Float], ef: Int): Seq[(Double, Int)] = {
-      if (entry < 0) return Nil
-      var ep = entry
-      var l = maxLevel
-      while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
-      searchLayer(q, if (ep == entry) Seq(ep) else Seq(ep, entry), ef, 0)
-    }
+    def searchSeeded(q: Array[Float], ef: Int): Seq[(Double, Int)] = searchFiltered(q, ef, null)
 
     /** Filtered top-ef: only `allow` nodes may be returned; traversal
       * is unrestricted (see [[searchLayer]]). Layer 0 is seeded with
@@ -189,9 +176,7 @@ object HnswIndex {
       * `entry`, and `entry` is always in the seed set. */
     def searchFiltered(q: Array[Float], ef: Int, allow: Int => Boolean): Seq[(Double, Int)] = {
       if (entry < 0) return Nil
-      var ep = entry
-      var l = maxLevel
-      while (l > 0) { ep = greedyClosest(q, ep, l); l -= 1 }
+      val ep = descend(q, 0)
       searchLayer(q, if (ep == entry) Seq(ep) else Seq(ep, entry), ef, 0, allow)
     }
 
@@ -206,32 +191,8 @@ object HnswIndex {
       * degree may exceed 2M — connectivity patch edges only ADD
       * reachability). Returns edges added; no-op (0) on the connected
       * graphs real data produces. */
-    def patchLayer0Reachability(): Int = {
-      val n = ids.length
-      if (n == 0 || entry < 0) return 0
-      val seen = mutable.BitSet(entry)
-      var frontier = List(entry)
-      while (frontier.nonEmpty) {
-        val next = mutable.ListBuffer.empty[Int]
-        frontier.foreach { u =>
-          val nbrs = adj(u)(0)
-          var i = 0
-          while (i < nbrs.length) {
-            val v = nbrs(i)
-            if (!seen.contains(v)) { seen += v; next += v }
-            i += 1
-          }
-        }
-        frontier = next.toList
-      }
-      var added = 0
-      var v = 0
-      while (v < n) {
-        if (!seen.contains(v)) { adj(entry)(0) += v; added += 1 }
-        v += 1
-      }
-      added
-    }
+    def patchLayer0Reachability(): Int =
+      GraphIndex.patchReachability(ids.length, entry, adj(_)(0))
 
     /** HNSW insert: descend to the node's top layer, then per-layer beam
       * + connect, pruning neighbor lists to M (2M at layer 0). */
@@ -245,10 +206,7 @@ object HnswIndex {
       adj += Array.fill(level + 1)(mutable.ArrayBuffer.empty[Int])
       if (entry < 0) { entry = idx; maxLevel = level; return }
 
-      var ep = entry
-      var l = maxLevel
-      while (l > level) { ep = greedyClosest(vec, ep, l); l -= 1 }
-      var eps: Seq[Int] = Seq(ep)
+      var eps: Seq[Int] = Seq(descend(vec, level))
       var layer = math.min(level, maxLevel)
       while (layer >= 0) {
         val found = searchLayer(vec, eps, params.efConstruction, layer)
@@ -282,41 +240,9 @@ object HnswIndex {
       numQueries: Int,
       k: Int,
       numPartitions: Int = 0,
-      params: Params = Params()): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val queries = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val p = params
-
-    val partials = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .repartition(parts, col("vec_id"))
-      // deterministic build order without materializing an extra copy of
-      // the partition: Spark sorts, the iterator feeds the graph directly
-      .sortWithinPartitions(col("vec_id"))
-      .mapPartitions { rows =>
-        val graph = new LocalGraph(p)
-        rows.foreach { case (id, v) => graph.insert(id, v) }
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.search(qv, p.efSearch)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-
-    mergeTopK(partials, k)
-  }
+      params: Params = Params()): DataFrame =
+    Graphs.selfSearch(embeddings, numQueries, k, numPartitions, params)(
+      Graphs.walk(_, _, k, params.efSearch))
 
   /** Exhaustive-beam self-search: the same per-partition graph builds as
     * [[selfSearch]], but each graph is layer-0 reachability-patched and
@@ -335,39 +261,9 @@ object HnswIndex {
       numQueries: Int,
       k: Int,
       numPartitions: Int = 0,
-      params: Params = Params()): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val queries = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val p = params
-    val partials = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .repartition(parts, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .mapPartitions { rows =>
-        val graph = new LocalGraph(p)
-        rows.foreach { case (id, v) => graph.insert(id, v) }
-        graph.patchLayer0Reachability()
-        val n = graph.ids.length
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.searchSeeded(qv, n)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      params: Params = Params()): DataFrame =
+    Graphs.selfSearch(embeddings, numQueries, k, numPartitions, params, hook = true)(
+      (g, q) => g.searchSeeded(q, g.ids.length))
 
   /** Filtered self-search — the HNSW twin of
     * [[VamanaIndex.selfSearchFiltered]] (filtered-ANN serving on both
@@ -384,7 +280,7 @@ object HnswIndex {
     * build/search output stays bit-identical. */
   def selfSearchFiltered(
       embeddings: DataFrame,
-      predicate: org.apache.spark.sql.Column,
+      predicate: Column,
       numQueries: Int,
       k: Int,
       numPartitions: Int = 0,
@@ -392,21 +288,13 @@ object HnswIndex {
       efFiltered: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val queries = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val bcQueries = spark.sparkContext.broadcast(GraphIndex.selfQueries(embeddings, numQueries))
     val p = params
-    val efF = efFiltered
+    val ef = Graphs.filteredBeam(p, efFiltered, k)
     val partials = embeddings
       .select(col("vec_id"), col("embedding"), predicate.cast("boolean").as("keep"))
       .as[(Long, Array[Float], Boolean)]
-      .repartition(parts, col("vec_id"))
+      .repartition(GraphIndex.partitions(spark, numPartitions), col("vec_id"))
       .sortWithinPartitions(col("vec_id"))
       .mapPartitions { rows =>
         val graph = new LocalGraph(p)
@@ -414,18 +302,20 @@ object HnswIndex {
         // align with node indices by construction
         val keep = mutable.ArrayBuffer.empty[Boolean]
         rows.foreach { case (id, v, kf) => graph.insert(id, v); keep += kf }
-        graph.patchLayer0Reachability()
+        Graphs.onLoad(graph)
         val allow: Int => Boolean = node => keep(node)
-        val ef = math.max(if (efF > 0) efF else p.efSearch, k + 1)
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.searchFiltered(qv, ef, allow)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
+        GraphIndex.walkQueries(graph, bcQueries.value, k, excludeSelf = true)(
+          Graphs.walkFiltered(graph, _, k, ef, allow))
       }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
+    GraphIndex.mergeTopK(partials, k)
+  }
+
+  /** The driver-side graph over IVF centroids, inserted in cluster-id
+    * order. */
+  private def centroidGraph(centroids: Array[IvfIndex.Centroid], params: Params): LocalGraph = {
+    val g = new LocalGraph(params)
+    centroids.sortBy(_._1).foreach { case (cid, v) => g.insert(cid, v) }
+    g
   }
 
   /** HNSW coarse quantizer — the FAISS `IVF*_HNSW*` recipe
@@ -441,22 +331,8 @@ object HnswIndex {
       centroids: Array[IvfIndex.Centroid],
       nprobe: Int,
       params: Params = Params()): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val g = new LocalGraph(params)
-    centroids.sortBy(_._1).foreach { case (cid, v) => g.insert(cid, v) }
-    val bc = spark.sparkContext.broadcast(g)
     val ef = math.max(params.efSearch, nprobe)
-    queries.select(col("query_id"), col("qvec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val graph = bc.value
-        rows.flatMap { case (qid, qv) =>
-          graph.search(qv, ef).take(nprobe)
-            .map { case (_, node) => (qid, qv, graph.ids(node)) }
-        }
-      }
-      .toDF("query_id", "qvec", "cluster_id")
+    GraphIndex.probes(queries, centroidGraph(centroids, params), nprobe)(_.search(_, ef))
   }
 
   /** Composed IVF search with HNSW probe selection — candidate scan,
@@ -479,144 +355,93 @@ object HnswIndex {
   // (faiss.write_index, vector_search_cluster.py:1051-1054) and loads
   // them at node start (:523-563) — graph build is the expensive
   // O(n·log n·M) step and must not be recomputed per query batch. The
-  // Spark rendition: one row per graph NODE — (part_id, seq, vec_id,
-  // level, vec, adj) where `seq` is the node's insertion ordinal (the
-  // array index every adjacency entry refers to) and `adj` is the
-  // per-layer neighbor-list array (layer 0 first) — written
-  // partitionBy(part_id), plus the index manifest (build params +
-  // partition count, the shards_metadata analog — [[IndexManifest]]).
-  // Loading fills the LocalGraph arrays DIRECTLY — zero insert work,
-  // spec-gated.
-
-  private val Family = "hnsw"
+  // lifecycle is the shared [[GraphIndex]] core; the HNSW node row is
+  // (part_id, seq, vec_id, level, vec, adj) where `seq` is the node's
+  // insertion ordinal (the array index every adjacency entry refers to)
+  // and `adj` is the per-layer neighbor-list array (layer 0 first).
 
   /** One serialized graph node. */
   case class HnswNode(part_id: Int, seq: Int, vec_id: Long, level: Int,
       vec: Array[Float], adj: Array[Array[Int]])
 
-  private def graphToRows(g: LocalGraph, partId: Int): Iterator[HnswNode] =
-    (0 until g.ids.length).iterator.map { i =>
-      HnswNode(partId, i, g.ids(i), g.levels(i), g.vecs(i), g.adj(i).map(_.toArray))
+  /** The HNSW family of the shared graph core. Routing is HashPartitioning's
+    * own id expression, `pmod(murmur3(vec_id), parts)`, so an add lands
+    * where the build's `repartition(parts, vec_id)` put its neighbours;
+    * reads that need every node reachable (filtered, exhaustive) patch
+    * layer 0 at load. Beam: the read walk is `search(q, efSearch)`; a
+    * filtered read floors `max(efFiltered | efSearch, k + 1)` before the
+    * saturation check and [[FilteredSearchPlanner.autoBeam]]. */
+  private[operators] object Graphs extends GraphIndex[Params, LocalGraph, HnswNode] {
+    val family = "hnsw"
+    implicit val nodeEncoder: Encoder[HnswNode] = Encoders.product[HnswNode]
+    def encode(p: Params): Map[String, Double] =
+      Map("m" -> p.m.toDouble, "ef_construction" -> p.efConstruction.toDouble)
+    def decode(m: IndexManifest): Params =
+      Params(m = m.param("m").toInt, efConstruction = m.param("ef_construction").toInt)
+    def route(vecId: Column, parts: Int): Column = pmod(hash(vecId), lit(parts))
+    def partOf(n: HnswNode): Int = n.part_id
+
+    def toRows(g: LocalGraph, partId: Int): Iterator[HnswNode] =
+      (0 until g.ids.length).iterator.map { i =>
+        HnswNode(partId, i, g.ids(i), g.levels(i), g.vecs(i), g.adj(i).map(_.toArray))
+      }
+
+    /** The entry point is derivable: insert's maxLevel ratchet means
+      * entry is the FIRST node (lowest seq) whose level equals the
+      * global max. */
+    def fromRows(rows: Array[HnswNode], p: Params): LocalGraph = {
+      val g = new LocalGraph(p)
+      rows.sortInPlaceBy(_.seq)
+      rows.foreach { n =>
+        g.ids += n.vec_id
+        g.vecs += n.vec
+        g.levels += n.level
+        g.adj += n.adj.map(a => mutable.ArrayBuffer.from(a))
+      }
+      if (rows.nonEmpty) {
+        g.maxLevel = g.levels.max
+        g.entry = g.levels.indexOf(g.maxLevel)
+      }
+      g
     }
 
-  /** Rebuild a [[LocalGraph]] from its serialized nodes — direct array
-    * fill, no graph traversal, no `insert` calls. The entry point is
-    * derivable: insert's maxLevel ratchet means entry is the FIRST node
-    * (lowest seq) whose level equals the global max. */
-  private[operators] def graphFromRows(rows: Array[HnswNode], params: Params): LocalGraph = {
-    val g = new LocalGraph(params)
-    rows.sortInPlaceBy(_.seq)
-    rows.foreach { n =>
-      g.ids += n.vec_id
-      g.vecs += n.vec
-      g.levels += n.level
-      g.adj += n.adj.map(a => mutable.ArrayBuffer.from(a))
+    /** The `repartition(parts, vec_id)` hash partitioning, inserted in
+      * sorted vec_id order — Spark sorts, the iterator feeds the graph
+      * directly. Fresh builds and persisted writes share it ⇒
+      * bit-identical graphs. */
+    def build[T: Encoder](embeddings: DataFrame, parts: Int, p: Params)(
+        use: (Int, LocalGraph) => Iterator[T]): Dataset[T] = {
+      import embeddings.sparkSession.implicits._
+      embeddings
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .repartition(parts, col("vec_id"))
+        .sortWithinPartitions(col("vec_id"))
+        .mapPartitions { rows =>
+          val graph = new LocalGraph(p)
+          rows.foreach { case (id, v) => graph.insert(id, v) }
+          use(org.apache.spark.TaskContext.getPartitionId(), graph)
+        }
     }
-    if (rows.nonEmpty) {
-      g.maxLevel = g.levels.max
-      g.entry = g.levels.indexOf(g.maxLevel)
-    }
-    g
+    def walk(g: LocalGraph, q: Array[Float], k: Int, beam: Int): Seq[(Double, Int)] =
+      g.search(q, beam)
+    def filteredBeam(p: Params, beam: Int, k: Int): Int =
+      math.max(if (beam > 0) beam else p.efSearch, k + 1)
+    def walkFiltered(g: LocalGraph, q: Array[Float], k: Int, beam: Int,
+        allow: Int => Boolean): Seq[(Double, Int)] = g.searchFiltered(q, beam, allow)
+    def insert(g: LocalGraph, id: Long, v: Array[Float]): Unit = g.insert(id, v)
+    override def onLoad(g: LocalGraph): Unit = g.patchLayer0Reachability()
   }
 
   /** S4 — build the per-partition graphs exactly as [[selfSearch]] does
-    * (same hash partitioning, same sorted insertion order ⇒ bit-identical
-    * graphs) and persist them: `dir/nodes` partitioned by part_id, then
-    * the manifest carrying (m, ef_construction, num_partitions), the row
-    * count, dimension and near-dup multiplicity, and the nodes schema
-    * ([[FilteredSearchPlanner.graphManifest]]). */
+    * and persist them ([[GraphIndex.writeIndex]]; manifest params m,
+    * ef_construction, num_partitions). */
   def writeIndex(
       embeddings: DataFrame,
       dir: String,
       numPartitions: Int = 0,
-      params: Params = Params()): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val p = params
-    IndexManifest.delete(spark, dir)
-    val nodes = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .repartition(parts, col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .mapPartitions { rows =>
-        val graph = new LocalGraph(p)
-        rows.foreach { case (id, v) => graph.insert(id, v) }
-        graphToRows(graph, org.apache.spark.TaskContext.getPartitionId())
-      }
-    nodes.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    IndexManifest.write(spark, dir, FilteredSearchPlanner.graphManifest(Family,
-      Map("m" -> p.m.toDouble, "ef_construction" -> p.efConstruction.toDouble),
-      parts, embeddings, nodes.toDF()))
-  }
-
-  /** Stored build params + partition count (efSearch is a read knob). */
-  private def paramsOf(m: IndexManifest, efSearch: Int): (Params, Int) =
-    (Params(m = m.param("m").toInt, efConstruction = m.param("ef_construction").toInt,
-       efSearch = efSearch),
-     m.param("num_partitions").toInt)
-
-  /** The committed index's manifest, build params and nodes table. */
-  private def open(spark: org.apache.spark.sql.SparkSession, dir: String,
-      efSearch: Int): (IndexManifest, Params, Int, DataFrame) = {
-    val m = IndexManifest.read(spark, dir, Family)
-    val (p, parts) = paramsOf(m, efSearch)
-    (m, p, parts, m.table(spark, dir, "nodes"))
-  }
-
-  /** The first `numQueries` stored vectors — self-search queries come off
-    * the index's own rows. The column predicate sits BEFORE the typed
-    * view: a closure filter is opaque to Catalyst and would scan and
-    * deserialize the whole nodes table; this one pushes into the scan. */
-  private def storedQueries(nodes: DataFrame, numQueries: Int): Array[(Long, Array[Float])] = {
-    import nodes.sparkSession.implicits._
-    nodes.where(col("vec_id") < numQueries).as[HnswNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-  }
-
-  /** The A1 partial+final top-k merge every self-search form shares.
-    * Fresh-build, persisted and filtered searches MUST all go through
-    * this one code path — the row-identity specs and the shared oracles
-    * assume their tie-breaking (dist, vec_id) and rounding can never
-    * diverge (the [[VamanaIndex.mergeTopK]] contract). */
-  private def mergeTopK(partials: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("dist"), 4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Shared persisted-search tail: walk every stored graph for the
-    * (collected, broadcast) query batch, merge shard-local top-k. */
-  private def searchGraphs(
-      nodes: DataFrame,
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      p: Params,
-      excludeSelf: Boolean): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val partials = nodes.as[HnswNode]
-      .groupByKey(_.part_id)
-      .flatMapGroups { (_, it) =>
-        val graph = graphFromRows(it.toArray, p)
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.search(qv, p.efSearch)
-            .filter { case (_, node) => !excludeSelf || graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      params: Params = Params()): Unit =
+    Graphs.writeIndex(embeddings, dir, numPartitions, params)
 
   /** efSearch LADDER over ONE persisted-index load — the knob-sweep
     * read path (q_hnsw_sweep): each stored graph is deserialized once
@@ -633,47 +458,29 @@ object HnswIndex {
       k: Int,
       efs: Seq[Int]): DataFrame = {
     import spark.implicits._
-    val (_, p, _, nodes) = open(spark, dir, efs.max)
-    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
+    val (_, p, _, nodes) = Graphs.open(spark, dir)
+    val bcQueries = spark.sparkContext.broadcast(Graphs.storedQueries(nodes, numQueries))
     val efList = efs
-    val partials = nodes.as[HnswNode]
-      .groupByKey(_.part_id)
-      .flatMapGroups { (_, it) =>
-        val graph = graphFromRows(it.toArray, p)
-        efList.iterator.flatMap { ef =>
-          bcQueries.value.iterator.flatMap { case (qid, qv) =>
-            graph.search(qv, ef)
-              .filter { case (_, node) => graph.ids(node) != qid }
-              .take(k)
-              .map { case (d, node) => (ef, qid, graph.ids(node), d) }
-          }
-        }
+    GraphIndex.mergeTopK(Graphs.eachGraph(nodes, p) { g =>
+      efList.iterator.flatMap { ef =>
+        GraphIndex.walkQueries(g, bcQueries.value, k, excludeSelf = true)(Graphs.walk(g, _, k, ef))
+          .map { case (qid, vid, d) => (ef.toLong, qid, vid, d) }
       }
-      .toDF("ef_search", "query_id", "vec_id", "dist")
-    val w = Window.partitionBy(col("ef_search"), col("query_id"))
-      .orderBy(col("dist"), col("vec_id"))
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("ef_search").cast("long").as("ef_search"), col("query_id"),
-        col("rank"), col("vec_id"), round(col("dist"), 4).as("dist"))
-      .orderBy(col("ef_search"), col("query_id"), col("rank"))
+    }, k, "ef_search")
   }
 
   /** S3 — self-search a persisted index without rebuilding: graphs
-    * reload via direct array fill ([[graphFromRows]] — zero insert work,
-    * spec-gated), queries come off the index's own rows (vec_id pushdown
-    * filter), and the shard-local top-k merge is identical to
-    * [[selfSearch]] — on the same build the results hash-match exactly. */
+    * reload via direct array fill (zero insert work, spec-gated), queries
+    * come off the index's own rows, and the shard-local top-k merge is
+    * identical to [[selfSearch]] — on the same build the results
+    * hash-match exactly. */
   def selfSearchPersisted(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       numQueries: Int,
       k: Int,
-      efSearch: Int = 64): DataFrame = {
-    val (_, p, _, nodes) = open(spark, dir, efSearch)
-    searchGraphs(nodes, storedQueries(nodes, numQueries), k, p, excludeSelf = true)
-  }
+      efSearch: Int = 64): DataFrame =
+    Graphs.selfSearchPersisted(spark, dir, numQueries, k, efSearch)
 
   /** The serving-path search: ARBITRARY query vectors against a
     * persisted index (the reference answers external queries over its
@@ -681,20 +488,13 @@ object HnswIndex {
     * micro-batch of requests from `knnServeLoop`-style streaming for the
     * online shape). The query batch is the small side by construction
     * (a request batch) — collected and broadcast like every other k-NN
-    * query path here; the index side streams per partition. No
-    * self-exclusion: external queries have no identity in the corpus. */
+    * query path here; the index side streams per partition. */
   def searchPersisted(
       queries: DataFrame,
       dir: String,
       k: Int,
-      efSearch: Int = 64): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val (_, p, _, nodes) = open(spark, dir, efSearch)
-    val qs = queries.select(col("query_id"), col("qvec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    searchGraphs(nodes, qs, k, p, excludeSelf = false)
-  }
+      efSearch: Int = 64): DataFrame =
+    Graphs.searchPersisted(queries, dir, k, efSearch)
 
   /** Exhaustive-beam search over a PERSISTED index — the stored-rows twin
     * of [[selfSearchExact]] (r9 verdict item 3): reload each shard graph
@@ -712,39 +512,19 @@ object HnswIndex {
       dir: String,
       numQueries: Int,
       k: Int): DataFrame = {
-    import spark.implicits._
-    val (_, p, _, nodes) = open(spark, dir, efSearch = 64)
-    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
-    val partials = nodes.as[HnswNode]
-      .groupByKey(_.part_id)
-      .flatMapGroups { (_, it) =>
-        val graph = graphFromRows(it.toArray, p)
-        graph.patchLayer0Reachability()
-        val n = graph.ids.length
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.searchSeeded(qv, n)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
+    val (_, p, _, nodes) = Graphs.open(spark, dir)
+    Graphs.serve(nodes, p, Graphs.storedQueries(nodes, numQueries), k, excludeSelf = true,
+      hook = true)((g, q) => g.searchSeeded(q, g.ids.length))
   }
 
   /** Filtered search SERVED from a once-persisted index — the FAISS
     * IDSelector / loaded-index serving shape (r9 verdict item 1): the
-    * graph build is never paid per call. The allowed-id set arrives as a
-    * DataFrame (one `vec_id` column — any predicate's survivors), is
-    * routed to shards with the build's own hash rule
-    * (`pmod(hash(vec_id), parts)` — the [[addToIndex]] precedent) and
-    * COGROUPED with the stored node rows, so the per-shard allow set is
-    * co-partitioned data-plane flow: no broadcast allowed-set, no driver
-    * collect, any predicate selectivity scales. Each shard graph reloads
-    * by direct fill, is reachability-patched at load, and runs the same
-    * admit-only-allowed walk as [[selfSearchFiltered]] — at ef ≥ shard
-    * size each shard emits its EXACT filtered top-k and the merge is the
-    * exact global answer (same oracle; hash unchanged).
+    * graph build is never paid per call
+    * ([[GraphIndex.selfSearchFilteredPersisted]]). Each shard graph is
+    * reachability-patched at load and runs the same admit-only-allowed
+    * walk as [[selfSearchFiltered]] — at ef ≥ shard size each shard
+    * emits its EXACT filtered top-k and the merge is the exact global
+    * answer (same oracle; hash unchanged).
     *
     * @note `dupMultiplicity = None` OPTS IN to the automatic k·m beam
     *   floor from the build-time estimate in the manifest; pass
@@ -757,114 +537,16 @@ object HnswIndex {
       k: Int,
       efFiltered: Int = 0,
       selectivity: Option[Double] = None,
-      dupMultiplicity: Option[Double] = None): DataFrame = {
-    import spark.implicits._
-    val (m, p, parts, nodes) = open(spark, dir, efSearch = Params().efSearch)
-    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
-    // ef ≈ max(ef/selectivity, k·dup-multiplicity) — the measured rules
-    // (FilteredSearchPlanner.autoBeam). dupMultiplicity = None defaults
-    // to the BUILD-TIME estimate stored in the manifest (r12 verdict
-    // item 1: the floor with no manual knob). A saturated caller beam
-    // (Int.MaxValue — the exactness pins) makes the floor a
-    // mathematical no-op (ADVICE r13).
-    val baseEf = math.max(if (efFiltered > 0) efFiltered else p.efSearch, k + 1)
-    val mEff =
-      if (baseEf == Int.MaxValue) None
-      else dupMultiplicity.orElse(m.dupMultiplicity)
-    val efF = FilteredSearchPlanner.autoBeam(baseEf, selectivity, k, mEff)
-    val allowByPart = allowed
-      .select(pmod(hash(col("vec_id")), lit(parts)).cast("int").as("part_id"),
-        col("vec_id"))
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-    val partials = nodes.as[HnswNode]
-      .groupByKey(_.part_id)
-      .cogroup(allowByPart) { (_, nodeIt, allowIt) =>
-        val rows = nodeIt.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val graph = graphFromRows(rows, p)
-          graph.patchLayer0Reachability()
-          val allowSet = allowIt.map(_._2).toSet
-          val allow: Int => Boolean = node => allowSet.contains(graph.ids(node))
-          bcQueries.value.iterator.flatMap { case (qid, qv) =>
-            graph.searchFiltered(qv, efF, allow)
-              .filter { case (_, node) => graph.ids(node) != qid }
-              .take(k)
-              .map { case (d, node) => (qid, graph.ids(node), d) }
-          }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      dupMultiplicity: Option[Double] = None): DataFrame =
+    Graphs.selfSearchFilteredPersisted(spark, dir, allowed, numQueries, k, efFiltered,
+      selectivity, dupMultiplicity)
 
   /** `index.add` for the persisted HNSW (the reference's background add,
     * vector_search_cluster.py:1210-1212, works on every index type —
-    * FAISS HNSW included): route the new batch to its partition with the
-    * SAME hash rule the build's `repartition(parts, vec_id)` used
-    * (`pmod(murmur3(vec_id), parts)` — HashPartitioning's own id
-    * expression), reload ONLY the touched partitions' graphs (direct
-    * array fill), insert the new nodes sorted by vec_id, and rewrite
-    * just those partitions (dynamic partition overwrite). Untouched
-    * partitions' files never move — at scale an add batch costs
-    * O(touched-partition graphs), not a full index rewrite.
-    *
-    * Like FAISS, the result is insertion-order-dependent: adding B after
-    * building on A yields the A-then-B graph, not the fresh A∪B graph —
-    * same neighbors-quality class, different (deterministic) rows. The
-    * manifest then commits the grown row count
-    * ([[FilteredSearchPlanner.commitGraphAdd]]). */
-  def addToIndex(newVectors: DataFrame, dir: String): Unit = {
-    val spark = newVectors.sparkSession
-    import spark.implicits._
-    val (m, p, parts, nodes) = open(spark, dir, efSearch = Params().efSearch)
-    val routed = newVectors
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("part_id", pmod(hash(col("vec_id")), lit(parts)))
-    val touched = routed.select(col("part_id")).distinct()
-      .collect().map(_.getInt(0))
-    val existing = nodes.as[HnswNode]
-      .filter(col("part_id").isin(touched.map(Int.box): _*))
-      .groupByKey(_.part_id)
-    val adds = routed
-      .select(col("part_id"), col("vec_id"), col("embedding"))
-      .as[(Int, Long, Array[Float])]
-      .groupByKey(_._1)
-    // Materialize the rewritten partitions BEFORE the overwrite commit:
-    // the cogroup plan lazily reads dir/nodes, and writing over the path
-    // a live plan still reads is a read-own-delete race the moment the
-    // plan shape changes or a task retries mid-commit. localCheckpoint
-    // (eager) pins the computed rows in block storage, severing the
-    // lineage back to the files the commit is about to delete. The
-    // inserted count is exact: the cogroup runs once per partition, in
-    // the checkpoint job's result stage.
-    val inserted = spark.sparkContext.longAccumulator
-    val rewritten = existing.cogroup(adds) { (pid, oldIt, newIt) =>
-      val graph = graphFromRows(oldIt.toArray, p)
-      // idempotent by id: a replayed batch (crash between the overwrite
-      // commit and hnswIngestLoop's marker) re-delivers vectors the
-      // graph already holds — skip them so the replay is a no-op, not a
-      // duplicate-node insert
-      val have = graph.ids.toSet
-      newIt.toArray.sortBy(_._2).foreach { case (_, id, v) =>
-        if (!have.contains(id)) { graph.insert(id, v); inserted.add(1L) }
-      }
-      graphToRows(graph, pid)
-    }.localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      rewritten.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      rewritten.unpersist(blocking = false)
-    }
-    FilteredSearchPlanner.commitGraphAdd(spark, dir, m, inserted.value)
-  }
+    * FAISS HNSW included): [[GraphIndex.addToIndex]] with the build's
+    * hash routing and [[LocalGraph.insert]]. */
+  def addToIndex(newVectors: DataFrame, dir: String): Unit =
+    Graphs.addToIndex(newVectors, dir)
 
   /** Structural fingerprint for the q_hnsw_levels oracle query: the
     * corpus's node-level histogram under [[levelOf]] — the deterministic
@@ -884,14 +566,8 @@ object HnswIndex {
     * fixtures only). */
   private[operators] def loadGraphsLocal(
       spark: org.apache.spark.sql.SparkSession,
-      dir: String,
-      efSearch: Int = 64): Map[Int, LocalGraph] = {
-    import spark.implicits._
-    val (_, p, _, nodes) = open(spark, dir, efSearch)
-    nodes.as[HnswNode].collect()
-      .groupBy(_.part_id)
-      .map { case (pid, rows) => pid -> graphFromRows(rows, p) }
-  }
+      dir: String): Map[Int, LocalGraph] =
+    Graphs.loadGraphsLocal(spark, dir)
 
   /** S4 for the coarse quantizer: persist the driver-built centroid
     * graph (model-plane — nlist ≈ √n rows) in the same node-row format,
@@ -903,14 +579,11 @@ object HnswIndex {
       dir: String,
       params: Params = Params()): Unit = {
     import spark.implicits._
-    val g = new LocalGraph(params)
-    centroids.sortBy(_._1).foreach { case (cid, v) => g.insert(cid, v) }
     IndexManifest.delete(spark, dir)
-    val nodes = spark.createDataset(graphToRows(g, 0).toSeq)
+    val nodes = spark.createDataset(Graphs.toRows(centroidGraph(centroids, params), 0).toSeq)
     nodes.write.mode("overwrite").parquet(s"$dir/coarse_nodes")
     IndexManifest.write(spark, dir, IndexManifest(CoarseFamily,
-      params = Map("m" -> params.m.toDouble,
-        "ef_construction" -> params.efConstruction.toDouble, "num_partitions" -> 1.0),
+      params = Graphs.encode(params) + ("num_partitions" -> 1.0),
       rows = Some(centroids.length.toLong), dim = centroids.headOption.map(_._2.length),
       tables = Map("coarse_nodes" -> IndexManifest.writtenSchema(nodes.toDF()))))
   }
@@ -925,21 +598,10 @@ object HnswIndex {
       nprobe: Int,
       efSearch: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    import spark.implicits._
     val m = IndexManifest.read(spark, dir, CoarseFamily)
-    val (p, _) = paramsOf(m, efSearch)
-    val g = graphFromRows(m.table(spark, dir, "coarse_nodes").as[HnswNode].collect(), p)
-    val bc = spark.sparkContext.broadcast(g)
-    val ef = math.max(p.efSearch, nprobe)
-    queries.select(col("query_id"), col("qvec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val graph = bc.value
-        rows.flatMap { case (qid, qv) =>
-          graph.search(qv, ef).take(nprobe)
-            .map { case (_, node) => (qid, qv, graph.ids(node)) }
-        }
-      }
-      .toDF("query_id", "qvec", "cluster_id")
+    val g = Graphs.fromRows(
+      m.table(spark, dir, "coarse_nodes").as[HnswNode](Graphs.nodeEncoder).collect(), Graphs.decode(m))
+    val ef = math.max(efSearch, nprobe)
+    GraphIndex.probes(queries, g, nprobe)(_.search(_, ef))
   }
 }

@@ -13,6 +13,13 @@ import org.apache.spark.sql.DataFrame
   * round-robin shuffle is trivial; at real scale (splits ≥ cores) it
   * is the identity. */
 private[graft] object ScanSpread {
+
+  /** Precondition: `df` must be scan-rooted — a file scan plus narrow
+    * per-row operators, no exchange (join, aggregate, repartition)
+    * upstream. The split count comes from `df.rdd`; for a plan with an
+    * exchange, adaptive execution can run the upstream stages eagerly
+    * while building that RDD, and the count would then measure
+    * post-shuffle partitions, not scan splits. */
   def spreadSmall(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (df.rdd.getNumPartitions >= sc.defaultParallelism) df

@@ -2,8 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 
 import graft.sources.IndexManifest
@@ -42,19 +41,13 @@ object VamanaIndex {
   /** One shard's graph: ids/vecs/adjacency + medoid entry point.
     * Serializable so bounded (model-plane) graphs may broadcast;
     * `search` is read-only per call. */
-  private[operators] final class LocalGraph(params: Params) extends Serializable {
+  private[operators] final class LocalGraph(params: Params)
+      extends Serializable with GraphIndex.Graph {
+    import GraphIndex.{l2 => dist}
     val ids = mutable.ArrayBuffer.empty[Long]
     val vecs = mutable.ArrayBuffer.empty[Array[Float]]
     val adj = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[Int]]
     var medoid: Int = -1
-
-    private def dist(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
-      s
-    }
 
     /** Deterministic stand-in for the paper's random R-regular init:
       * out-neighbors of node i are splitmix64(id, j)-selected — arbitrary
@@ -64,10 +57,7 @@ object VamanaIndex {
       val seen = mutable.BitSet(i)
       var j = 0L
       while (out.length < math.min(params.r, n - 1) && j < 4L * params.r + 16) {
-        var z = ids(i) * 0x9e3779b97f4a7c15L + j + 0x9e3779b97f4a7c15L
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        z = z ^ (z >>> 31)
+        val z = GraphIndex.splitmix64(ids(i) * 0x9e3779b97f4a7c15L + j)
         val cand = java.lang.Long.remainderUnsigned(z, n.toLong).toInt
         if (!seen.contains(cand)) { seen += cand; out += cand }
         j += 1
@@ -201,12 +191,19 @@ object VamanaIndex {
       vecs += vec
       adj += mutable.ArrayBuffer.empty[Int]
       if (idx == 0) { medoid = 0; return }
-      val (_, visited) = greedySearch(vec, params.l)
-      robustPrune(idx, visited, params.alpha)
-      adj(idx).foreach { b =>
-        if (!adj(b).contains(idx)) {
-          adj(b) += idx
-          if (adj(b).length > params.r) robustPrune(b, adj(b).toSeq, params.alpha)
+      connect(idx, params.alpha)
+    }
+
+    /** One node's Vamana step: greedy search for its vector, RobustPrune
+      * of the visited set into its out-edges, then backedges, re-pruning
+      * any neighbour pushed past R. */
+    private def connect(p: Int, alpha: Double): Unit = {
+      val (_, visited) = greedySearch(vecs(p), params.l)
+      robustPrune(p, visited, alpha)
+      adj(p).foreach { b =>
+        if (!adj(b).contains(p)) {
+          adj(b) += p
+          if (adj(b).length > params.r) robustPrune(b, adj(b).toSeq, alpha)
         }
       }
     }
@@ -222,17 +219,7 @@ object VamanaIndex {
       if (n <= 1) return
       Seq(1.0, params.alpha).foreach { alpha =>
         var p = 0
-        while (p < n) {
-          val (_, visited) = greedySearch(vecs(p), params.l)
-          robustPrune(p, visited, alpha)
-          adj(p).foreach { b =>
-            if (!adj(b).contains(p)) {
-              adj(b) += p
-              if (adj(b).length > params.r) robustPrune(b, adj(b).toSeq, alpha)
-            }
-          }
-          p += 1
-        }
+        while (p < n) { connect(p, alpha); p += 1 }
       }
       // structural exhaustive-walk contract: after pruning, re-attach
       // any node backedge re-pruning disconnected (no-op on the
@@ -248,10 +235,8 @@ object VamanaIndex {
       * params.l (same knob as [[searchFiltered]]); since [[build]] ends
       * in [[patchReachability]], at beam ≥ n the walk visits every node
       * and the result is the EXACT top-k. */
-    def search(q: Array[Float], k: Int, beam: Int = 0): Seq[(Double, Int)] = {
-      if (medoid < 0) return Nil
-      greedySearch(q, math.max(if (beam > 0) beam else params.l, k))._1.take(k)
-    }
+    def search(q: Array[Float], k: Int, beam: Int = 0): Seq[(Double, Int)] =
+      searchFiltered(q, k, _ => true, beam)
 
     /** Filtered top-k: only nodes with `allow` may be returned; the
       * walk still traverses disallowed nodes (see [[greedySearch]]).
@@ -277,42 +262,16 @@ object VamanaIndex {
       * exhaustive-walk contract, and irrelevant to α-pruning quality
       * since patch edges only ADD reachability). Returns the number of
       * edges added. */
-    def patchReachability(): Int = {
-      val n = ids.length
-      if (n == 0 || medoid < 0) return 0
-      val seen = mutable.BitSet(medoid)
-      var frontier = List(medoid)
-      while (frontier.nonEmpty) {
-        val next = mutable.ListBuffer.empty[Int]
-        frontier.foreach { u =>
-          val nbrs = adj(u)
-          var i = 0
-          while (i < nbrs.length) {
-            val v = nbrs(i)
-            if (!seen.contains(v)) { seen += v; next += v }
-            i += 1
-          }
-        }
-        frontier = next.toList
-      }
-      var added = 0
-      var v = 0
-      while (v < n) {
-        if (!seen.contains(v)) { adj(medoid) += v; added += 1 }
-        v += 1
-      }
-      added
-    }
+    def patchReachability(): Int = GraphIndex.patchReachability(ids.length, medoid, adj)
   }
 
+  /** Rows keyed by shard — the `vec_id % parts` routing. */
   private def shardAndBuild(
       embeddings: DataFrame,
-      parts: Int,
-      p: Params): org.apache.spark.sql.KeyValueGroupedDataset[Int, (Int, Long, Array[Float])] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
+      parts: Int): KeyValueGroupedDataset[Int, (Int, Long, Array[Float])] = {
+    import embeddings.sparkSession.implicits._
     embeddings
-      .select(pmod(col("vec_id"), lit(parts)).cast("int").as("part_id"),
+      .select(Graphs.route(col("vec_id"), parts).cast("int").as("part_id"),
         col("vec_id"), col("embedding"))
       .as[(Int, Long, Array[Float])]
       .groupByKey(_._1)
@@ -338,33 +297,9 @@ object VamanaIndex {
       k: Int,
       numPartitions: Int = 0,
       params: Params = Params(),
-      searchBeam: Int = 0): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val queries = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val p = params
-    val partials = shardAndBuild(embeddings, parts, p)
-      .flatMapGroups { (_, it) =>
-        val graph = new LocalGraph(p)
-        graph.build(it.map(t => (t._2, t._3)).toArray)
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.search(qv, k + 1, searchBeam)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      searchBeam: Int = 0): DataFrame =
+    Graphs.selfSearch(embeddings, numQueries, k, numPartitions, params)(
+      Graphs.walk(_, _, k, searchBeam))
 
   /** Filtered self-search — predicate-aware graph search (the
     * filtered-ANN serving mode of Qdrant/Weaviate-class systems): a
@@ -381,7 +316,7 @@ object VamanaIndex {
     * runs L ≪ n and trades recall, same as unfiltered serving. */
   def selfSearchFiltered(
       embeddings: DataFrame,
-      predicate: org.apache.spark.sql.Column,
+      predicate: Column,
       numQueries: Int,
       k: Int,
       numPartitions: Int = 0,
@@ -389,18 +324,11 @@ object VamanaIndex {
       searchBeam: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val queries = embeddings.where(col("vec_id") < numQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .collect()
-      .sortBy(_._1)
-    val bcQueries = spark.sparkContext.broadcast(queries)
+    val bcQueries = spark.sparkContext.broadcast(GraphIndex.selfQueries(embeddings, numQueries))
     val p = params
     val partials = embeddings
-      .select(pmod(col("vec_id"), lit(parts)).cast("int").as("part_id"),
+      .select(Graphs.route(col("vec_id"), GraphIndex.partitions(spark, numPartitions))
+        .cast("int").as("part_id"),
         col("vec_id"), col("embedding"), predicate.cast("boolean").as("keep"))
       .as[(Int, Long, Array[Float], Boolean)]
       .groupByKey(_._1)
@@ -410,27 +338,10 @@ object VamanaIndex {
         graph.build(rows.map(t => (t._2, t._3)))
         val keepById = rows.map(t => t._2 -> t._4).toMap
         val allow: Int => Boolean = node => keepById(graph.ids(node))
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.searchFiltered(qv, k + 1, allow, searchBeam)
-            .filter { case (_, node) => graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
+        GraphIndex.walkQueries(graph, bcQueries.value, k, excludeSelf = true)(
+          Graphs.walkFiltered(graph, _, k, searchBeam, allow))
       }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
-
-  /** The shared A1 shard-merge tail: fresh-build and persisted searches
-    * MUST go through this one code path — VamanaIndexSpec's row-identity
-    * test assumes their tie-breaking/rounding can never diverge. */
-  private def mergeTopK(partials: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), round(col("dist"), 4).as("dist"))
-      .orderBy(col("query_id"), col("rank"))
+    GraphIndex.mergeTopK(partials, k)
   }
 
   /** The oracle-checkable structural fingerprint: every shard's entry
@@ -446,7 +357,7 @@ object VamanaIndex {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val p = params
-    shardAndBuild(embeddings, numPartitions, p)
+    shardAndBuild(embeddings, numPartitions)
       .mapGroups { (pid, it) =>
         val graph = new LocalGraph(p)
         graph.prepare(it.map(t => (t._2, t._3)).toArray)
@@ -457,110 +368,74 @@ object VamanaIndex {
   }
 
   // ---- persistence (S4/S3 for the Vamana family) -----------------------
-  // Same contract as the HNSW persistence: graph build is the expensive
-  // step and must not recompute per query batch. One row per node —
-  // (part_id, seq, vec_id, vec, adj, medoid_seq) with `seq` the node's
-  // position in the sorted-vec_id build order and `medoid_seq` the
-  // shard's entry point (constant within a shard — one int next to a
-  // d-float vector, cheaper than a second build pass or a per-shard meta
-  // join) — written partitionBy(part_id), plus the index manifest with
-  // the build params ([[IndexManifest]]).
-
-  private val Family = "vamana"
+  // The shared [[GraphIndex]] lifecycle. One row per node — (part_id,
+  // seq, vec_id, vec, adj, medoid_seq) with `seq` the node's position in
+  // the sorted-vec_id build order and `medoid_seq` the shard's entry
+  // point (constant within a shard — one int next to a d-float vector,
+  // cheaper than a second build pass or a per-shard meta join).
 
   /** One serialized graph node (single layer — no level column). */
   case class VamanaNode(part_id: Int, seq: Int, vec_id: Long,
       vec: Array[Float], adj: Array[Int], medoid_seq: Int)
 
-  private def graphToRows(g: LocalGraph, partId: Int): Iterator[VamanaNode] =
-    (0 until g.ids.length).iterator.map { i =>
-      VamanaNode(partId, i, g.ids(i), g.vecs(i), g.adj(i).toArray, g.medoid)
+  /** The Vamana family of the shared graph core. Routing is
+    * `pmod(vec_id, parts)`, the build's shard key; the stored adjacency
+    * is already reachability-patched ([[LocalGraph.build]] ends in
+    * `patchReachability`), so nothing runs at load. Beam: the read walk
+    * is `search(q, k + 1, beam)` (beam 0 = the build's L), and a
+    * filtered read hands the raw `searchBeam` to
+    * [[FilteredSearchPlanner.autoBeam]]. */
+  private[operators] object Graphs extends GraphIndex[Params, LocalGraph, VamanaNode] {
+    val family = "vamana"
+    implicit val nodeEncoder: Encoder[VamanaNode] = Encoders.product[VamanaNode]
+    def encode(p: Params): Map[String, Double] =
+      Map("r" -> p.r.toDouble, "l" -> p.l.toDouble, "alpha" -> p.alpha)
+    def decode(m: IndexManifest): Params =
+      Params(m.param("r").toInt, m.param("l").toInt, m.param("alpha"))
+    def route(vecId: Column, parts: Int): Column = pmod(vecId, lit(parts))
+    def partOf(n: VamanaNode): Int = n.part_id
+
+    def toRows(g: LocalGraph, partId: Int): Iterator[VamanaNode] =
+      (0 until g.ids.length).iterator.map { i =>
+        VamanaNode(partId, i, g.ids(i), g.vecs(i), g.adj(i).toArray, g.medoid)
+      }
+
+    def fromRows(rows: Array[VamanaNode], p: Params): LocalGraph = {
+      val g = new LocalGraph(p)
+      rows.sortInPlaceBy(_.seq)
+      g.ids ++= rows.iterator.map(_.vec_id)
+      g.vecs ++= rows.iterator.map(_.vec)
+      rows.foreach(n => g.adj += mutable.ArrayBuffer.from(n.adj))
+      g.medoid = if (rows.nonEmpty) rows(0).medoid_seq else -1
+      g
     }
 
-  /** Direct array fill — zero build work on reload (spec-gated via the
-    * row-identity compare against the fresh build). */
-  private[operators] def graphFromRows(
-      rows: Array[VamanaNode], params: Params): LocalGraph = {
-    val g = new LocalGraph(params)
-    rows.sortInPlaceBy(_.seq)
-    g.ids ++= rows.iterator.map(_.vec_id)
-    g.vecs ++= rows.iterator.map(_.vec)
-    rows.foreach(n => g.adj += mutable.ArrayBuffer.from(n.adj))
-    g.medoid = if (rows.nonEmpty) rows(0).medoid_seq else -1
-    g
+    /** One graph per shard, [[LocalGraph.build]] over its rows. Fresh
+      * builds and persisted writes share it ⇒ bit-identical graphs. */
+    def build[T: Encoder](embeddings: DataFrame, parts: Int, p: Params)(
+        use: (Int, LocalGraph) => Iterator[T]): Dataset[T] =
+      shardAndBuild(embeddings, parts).flatMapGroups { (pid, it) =>
+        val graph = new LocalGraph(p)
+        graph.build(it.map(t => (t._2, t._3)).toArray)
+        use(pid, graph)
+      }
+    def walk(g: LocalGraph, q: Array[Float], k: Int, beam: Int): Seq[(Double, Int)] =
+      g.search(q, k + 1, beam)
+    def filteredBeam(p: Params, beam: Int, k: Int): Int = beam
+    def walkFiltered(g: LocalGraph, q: Array[Float], k: Int, beam: Int,
+        allow: Int => Boolean): Seq[(Double, Int)] = g.searchFiltered(q, k + 1, allow, beam)
+    def insert(g: LocalGraph, id: Long, v: Array[Float]): Unit = g.insertPoint(id, v)
   }
 
-  /** S4 — build per-shard graphs exactly as [[selfSearch]] does (same
-    * mod routing, same sorted build order ⇒ bit-identical graphs) and
-    * persist: `dir/nodes` partitioned by part_id, then the manifest
-    * carrying the build params + shard count, the row count, dimension
-    * and near-dup multiplicity, and the nodes schema
-    * ([[FilteredSearchPlanner.graphManifest]]). */
+  /** S4 — build per-shard graphs exactly as [[selfSearch]] does and
+    * persist them ([[GraphIndex.writeIndex]]; manifest params r, l,
+    * alpha, num_partitions). */
   def writeIndex(
       embeddings: DataFrame,
       dir: String,
       numPartitions: Int = 0,
-      params: Params = Params()): Unit = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
-    val p = params
-    IndexManifest.delete(spark, dir)
-    val nodes = shardAndBuild(embeddings, parts, p)
-      .flatMapGroups { (pid, it) =>
-        val graph = new LocalGraph(p)
-        graph.build(it.map(t => (t._2, t._3)).toArray)
-        graphToRows(graph, pid)
-      }
-    nodes.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    IndexManifest.write(spark, dir, FilteredSearchPlanner.graphManifest(Family,
-      Map("r" -> p.r.toDouble, "l" -> p.l.toDouble, "alpha" -> p.alpha),
-      parts, embeddings, nodes.toDF()))
-  }
-
-  /** The committed index's manifest, build params, shard count and nodes
-    * table. */
-  private def open(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (IndexManifest, Params, Int, DataFrame) = {
-    val m = IndexManifest.read(spark, dir, Family)
-    (m, Params(m.param("r").toInt, m.param("l").toInt, m.param("alpha")),
-     m.param("num_partitions").toInt, m.table(spark, dir, "nodes"))
-  }
-
-  /** The first `numQueries` stored vectors (vec_id pushdown filter). */
-  private def storedQueries(nodes: DataFrame, numQueries: Int): Array[(Long, Array[Float])] = {
-    import nodes.sparkSession.implicits._
-    nodes.where(col("vec_id") < numQueries).as[VamanaNode]
-      .map(n => (n.vec_id, n.vec)).collect().sortBy(_._1)
-  }
-
-  /** Shared persisted-search tail: reload every stored graph (direct
-    * fill), walk it for the broadcast query batch, A1-merge. */
-  private def searchGraphs(
-      nodes: DataFrame,
-      p: Params,
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      excludeSelf: Boolean): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val bcQueries = spark.sparkContext.broadcast(queries)
-    val partials = nodes.as[VamanaNode]
-      .groupByKey(_.part_id)
-      .flatMapGroups { (_, it) =>
-        val graph = graphFromRows(it.toArray, p)
-        bcQueries.value.iterator.flatMap { case (qid, qv) =>
-          graph.search(qv, k + 1)
-            .filter { case (_, node) => !excludeSelf || graph.ids(node) != qid }
-            .take(k)
-            .map { case (d, node) => (qid, graph.ids(node), d) }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      params: Params = Params()): Unit =
+    Graphs.writeIndex(embeddings, dir, numPartitions, params)
 
   /** S3 — self-search a persisted index without rebuilding; on the same
     * build the rows hash-match [[selfSearch]] exactly (spec-gated). */
@@ -568,24 +443,16 @@ object VamanaIndex {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       numQueries: Int,
-      k: Int): DataFrame = {
-    val (_, p, _, nodes) = open(spark, dir)
-    searchGraphs(nodes, p, storedQueries(nodes, numQueries), k, excludeSelf = true)
-  }
+      k: Int): DataFrame =
+    Graphs.selfSearchPersisted(spark, dir, numQueries, k, beam = 0)
 
   /** Filtered search SERVED from a once-persisted index — the FAISS
     * IDSelector / loaded-index serving shape (r9 verdict item 1), the
-    * Vamana twin of [[HnswIndex.selfSearchFilteredPersisted]]: the
-    * α-pruned shard graphs are never rebuilt per call. The allowed-id
-    * set arrives as a DataFrame (one `vec_id` column), is routed with
-    * the build's own `vec_id % parts` rule and COGROUPED with the
-    * stored node rows — co-partitioned data-plane flow, no broadcast
-    * allowed-set, no driver collect, any predicate selectivity. Stored
-    * adjacency is already reachability-patched ([[LocalGraph.build]]
-    * ends in `patchReachability` before persist), so at beam ≥ shard
-    * size each shard emits its EXACT filtered top-k and the A1 merge is
-    * the exact global answer — same brute-force filtered oracle as the
-    * fresh-build form, hash unchanged.
+    * Vamana twin of [[HnswIndex.selfSearchFilteredPersisted]]
+    * ([[GraphIndex.selfSearchFilteredPersisted]]): the α-pruned shard
+    * graphs are never rebuilt per call, and at beam ≥ shard size each
+    * shard emits its EXACT filtered top-k — same brute-force filtered
+    * oracle as the fresh-build form, hash unchanged.
     *
     * @note `dupMultiplicity = None` OPTS IN to the automatic k·m beam
     *   floor from the build-time estimate in the manifest; pass
@@ -598,56 +465,14 @@ object VamanaIndex {
       k: Int,
       searchBeam: Int = 0,
       selectivity: Option[Double] = None,
-      dupMultiplicity: Option[Double] = None): DataFrame = {
-    import spark.implicits._
-    val (m, p, parts, nodes) = open(spark, dir)
-    val bcQueries = spark.sparkContext.broadcast(storedQueries(nodes, numQueries))
-    // L ≈ max(L/selectivity, k·dup-multiplicity) — the measured rules
-    // (FilteredSearchPlanner.autoBeam). dupMultiplicity = None defaults
-    // to the BUILD-TIME estimate stored in the manifest (r12 verdict
-    // item 1: the floor with no manual knob); a saturated caller beam
-    // makes the floor a mathematical no-op (ADVICE r13).
-    val mEff =
-      if (searchBeam == Int.MaxValue) None
-      else dupMultiplicity.orElse(m.dupMultiplicity)
-    val beam = FilteredSearchPlanner.autoBeam(
-      searchBeam, selectivity, k, mEff)
-    val allowByPart = allowed
-      .select(pmod(col("vec_id"), lit(parts)).cast("int").as("part_id"),
-        col("vec_id"))
-      .as[(Int, Long)]
-      .groupByKey(_._1)
-    val partials = nodes.as[VamanaNode]
-      .groupByKey(_.part_id)
-      .cogroup(allowByPart) { (_, nodeIt, allowIt) =>
-        val rows = nodeIt.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val graph = graphFromRows(rows, p)
-          val allowSet = allowIt.map(_._2).toSet
-          val allow: Int => Boolean = node => allowSet.contains(graph.ids(node))
-          bcQueries.value.iterator.flatMap { case (qid, qv) =>
-            graph.searchFiltered(qv, k + 1, allow, beam)
-              .filter { case (_, node) => graph.ids(node) != qid }
-              .take(k)
-              .map { case (d, node) => (qid, graph.ids(node), d) }
-          }
-        }
-      }
-      .toDF("query_id", "vec_id", "dist")
-    mergeTopK(partials, k)
-  }
+      dupMultiplicity: Option[Double] = None): DataFrame =
+    Graphs.selfSearchFilteredPersisted(spark, dir, allowed, numQueries, k, searchBeam,
+      selectivity, dupMultiplicity)
 
   /** Serving path: arbitrary query vectors against a persisted index
     * (no self-exclusion — external queries have no corpus identity). */
-  def searchPersisted(queries: DataFrame, dir: String, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val (_, p, _, nodes) = open(spark, dir)
-    val qs = queries.select(col("query_id"), col("qvec"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    searchGraphs(nodes, p, qs, k, excludeSelf = false)
-  }
+  def searchPersisted(queries: DataFrame, dir: String, k: Int): DataFrame =
+    Graphs.searchPersisted(queries, dir, k, beam = 0)
 
   /** Vamana coarse quantizer — IVF probe selection via one driver-built
     * graph over the nlist centroids (the DiskANN counterpart of
@@ -667,22 +492,10 @@ object VamanaIndex {
       centroids: Array[IvfIndex.Centroid],
       nprobe: Int,
       params: Params = Params()): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val g = new LocalGraph(params)
     g.build(centroids.map { case (cid, v) => (cid, v) })
     g.patchReachability()
-    val bc = spark.sparkContext.broadcast(g)
-    queries.select(col("query_id"), col("qvec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { rows =>
-        val graph = bc.value
-        rows.flatMap { case (qid, qv) =>
-          graph.search(qv, nprobe)
-            .map { case (_, node) => (qid, qv, graph.ids(node)) }
-        }
-      }
-      .toDF("query_id", "qvec", "cluster_id")
+    GraphIndex.probes(queries, g, nprobe)(_.search(_, nprobe))
   }
 
   /** Composed IVF search with Vamana probe selection — candidate scan,
@@ -701,55 +514,9 @@ object VamanaIndex {
 
   /** `index.add` for the persisted Vamana — the FreshDiskANN insert
     * path (the reference's background add works on every FAISS type;
-    * DiskANN's own streaming variant is FreshDiskANN): route the batch
-    * by the build's `vec_id % parts` rule, reload ONLY touched shards
-    * (direct fill), [[LocalGraph.insertPoint]] each new vector sorted
-    * by vec_id, rewrite just those partitions (dynamic partition
-    * overwrite after an eager localCheckpoint — same
-    * read-own-delete-race discipline as the HNSW add). Untouched
-    * shards' files never move. Insert-order dependence matches FAISS:
-    * A-then-B ≠ fresh A∪B, deterministically. The manifest then commits
-    * the grown row count ([[FilteredSearchPlanner.commitGraphAdd]]). */
-  def addToIndex(newVectors: DataFrame, dir: String): Unit = {
-    val spark = newVectors.sparkSession
-    import spark.implicits._
-    val (m, p, parts, nodes) = open(spark, dir)
-    val routed = newVectors
-      .select(pmod(col("vec_id"), lit(parts)).cast("int").as("part_id"),
-        col("vec_id"), col("embedding"))
-    val touched = routed.select(col("part_id")).distinct()
-      .collect().map(_.getInt(0))
-    val existing = nodes.as[VamanaNode]
-      .filter(col("part_id").isin(touched.map(Int.box): _*))
-      .groupByKey(_.part_id)
-    val adds = routed.as[(Int, Long, Array[Float])].groupByKey(_._1)
-    // exact: the cogroup runs once per shard, in the checkpoint job's
-    // result stage
-    val inserted = spark.sparkContext.longAccumulator
-    val rewritten = existing.cogroup(adds) { (pid, oldIt, newIt) =>
-      val graph = graphFromRows(oldIt.toArray, p)
-      // idempotent by id: a batch replayed after a crash in the
-      // window between the overwrite commit and the caller's replay
-      // marker (vamanaIngestLoop) re-delivers vectors the graph
-      // already holds — skipping them makes the replay a no-op
-      // instead of a duplicate-node insert
-      val have = graph.ids.toSet
-      newIt.toArray.sortBy(_._2).foreach { case (_, id, v) =>
-        if (!have.contains(id)) { graph.insertPoint(id, v); inserted.add(1L) }
-      }
-      graphToRows(graph, pid)
-    }.localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      rewritten.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      rewritten.unpersist(blocking = false)
-    }
-    FilteredSearchPlanner.commitGraphAdd(spark, dir, m, inserted.value)
-  }
+    * DiskANN's own streaming variant is FreshDiskANN):
+    * [[GraphIndex.addToIndex]] with the build's `vec_id % parts` routing
+    * and [[LocalGraph.insertPoint]]. */
+  def addToIndex(newVectors: DataFrame, dir: String): Unit =
+    Graphs.addToIndex(newVectors, dir)
 }

@@ -328,14 +328,23 @@ object StreamingAnalytics {
       vectorStream: DataFrame,
       centroids: Array[graft.operators.IvfIndex.Centroid],
       indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectorStream.writeStream
+    markedIngest(vectorStream, indexDir)(
+      graft.operators.IvfIndex.addToIndex(_, centroids, indexDir))
+
+  /** The marker-guarded ingest sink of the ingest loops: a non-empty
+    * micro-batch without a `dir/_batches/<batchId>` marker is handed to
+    * `add`, and the marker is written after `add` returns, so a
+    * re-delivered batch is skipped. */
+  private def markedIngest(stream: DataFrame, dir: String)(
+      add: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/$batchId")
+        val marker = new org.apache.hadoop.fs.Path(s"$dir/_batches/$batchId")
         val fs = marker.getFileSystem(
           batch.sparkSession.sparkContext.hadoopConfiguration)
         if (!fs.exists(marker) && !batch.isEmpty) {
-          graft.operators.IvfIndex.addToIndex(batch, centroids, indexDir)
+          add(batch)
           fs.create(marker, true).close()
         }
       }
@@ -401,18 +410,7 @@ object StreamingAnalytics {
   def hnswIngestLoop(
       vectorStream: DataFrame,
       indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectorStream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          graft.operators.HnswIndex.addToIndex(batch, indexDir)
-          fs.create(marker, true).close()
-        }
-      }
-      .start()
+    markedIngest(vectorStream, indexDir)(graft.operators.HnswIndex.addToIndex(_, indexDir))
 
   /** [[hnswIngestLoop]] for the Vamana family: each micro-batch routes
     * by the build's `vec_id % parts` rule and inserts via the
@@ -423,18 +421,7 @@ object StreamingAnalytics {
   def vamanaIngestLoop(
       vectorStream: DataFrame,
       indexDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectorStream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          graft.operators.VamanaIndex.addToIndex(batch, indexDir)
-          fs.create(marker, true).close()
-        }
-      }
-      .start()
+    markedIngest(vectorStream, indexDir)(graft.operators.VamanaIndex.addToIndex(_, indexDir))
 
   /** The crawl-ingest dedup loop: each micro-batch of documents
     * anti-joins against a PERSISTED seen-hash set (the batch
@@ -539,32 +526,23 @@ object StreamingAnalytics {
       keyCol: String,
       outDir: String,
       m: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
-    keyStream.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val marker = new org.apache.hadoop.fs.Path(s"$outDir/_batches/$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val regDir = s"$outDir/registers"
-          val batchRegs = graft.operators.Sketches.hllRegisters(batch, keyCol, m)
-          val merged = graft.sources.IndexVersions.latestPath(spark, regDir) match {
-            case Some(cur) =>
-              spark.read.parquet(cur).unionAll(batchRegs)
-                .groupBy(col("bucket")).agg(max(col("rho")).as("rho"))
-            case None => batchRegs
-          }
-          // snapshot-then-flip: the read version and the written version
-          // are different directories, so there is no read-own-overwrite
-          // hazard and no instant at which the table is partial
-          graft.sources.IndexVersions.publish(spark, regDir)(v =>
-            merged.write.parquet(v))
-          graft.sources.IndexVersions.prune(spark, regDir, keep = 2)
-          fs.mkdirs(marker.getParent)
-          fs.create(marker, true).close()
-        }
+    markedIngest(keyStream, outDir) { batch =>
+      val spark = batch.sparkSession
+      val regDir = s"$outDir/registers"
+      val batchRegs = graft.operators.Sketches.hllRegisters(batch, keyCol, m)
+      val merged = graft.sources.IndexVersions.latestPath(spark, regDir) match {
+        case Some(cur) =>
+          spark.read.parquet(cur).unionAll(batchRegs)
+            .groupBy(col("bucket")).agg(max(col("rho")).as("rho"))
+        case None => batchRegs
       }
-      .start()
+      // snapshot-then-flip: the read version and the written version
+      // are different directories, so there is no read-own-overwrite
+      // hazard and no instant at which the table is partial
+      graft.sources.IndexVersions.publish(spark, regDir)(v =>
+        merged.write.parquet(v))
+      graft.sources.IndexVersions.prune(spark, regDir, keep = 2)
+    }
 
   /** The register table [[sketchIngestLoop]] maintains — resolved
     * through the `_LATEST` pointer, so readers only ever see a fully

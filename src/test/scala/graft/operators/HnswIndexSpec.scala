@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -90,30 +91,42 @@ class HnswIndexSpec extends SparkSpec {
   }
 
   test("addToIndex: routing matches the build partitioner, added vectors searchable, only touched partitions rewritten") {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_spec_add"
-    val freshDir = s"${System.getProperty("java.io.tmpdir")}/graft_hnsw_spec_add_fresh"
-    HnswIndex.writeIndex(emb.where($"vec_id" < 400), dir, numPartitions = 4)
-    HnswIndex.addToIndex(emb.where($"vec_id" >= 400), dir)
-    HnswIndex.writeIndex(emb, freshDir, numPartitions = 4)
-    val merged = HnswIndex.loadGraphsLocal(spark, dir)
-    val fresh = HnswIndex.loadGraphsLocal(spark, freshDir)
-    // the add batch must route to exactly the partitions the build's
-    // repartition(parts, vec_id) would have chosen — per-partition id
-    // MEMBERSHIP equals a fresh build over the union (graph EDGES may
-    // differ: add is insertion-order-dependent, like FAISS)
-    assert(merged.keySet == fresh.keySet)
-    merged.keySet.foreach { pid =>
-      assert(merged(pid).ids.toSet == fresh(pid).ids.toSet, s"partition $pid membership")
+    // one row per graph family: (name, write, add, per-partition sorted
+    // ids of the stored graphs, serve, persisted self-search)
+    def members(graphs: Map[Int, GraphIndex.Graph]) =
+      graphs.map { case (pid, g) => pid -> g.ids.toSeq.sorted }
+    Seq[(String, (DataFrame, String) => Unit, (DataFrame, String) => Unit,
+        String => Map[Int, Seq[Long]], (DataFrame, String) => DataFrame, String => DataFrame)](
+      ("hnsw", HnswIndex.writeIndex(_, _, numPartitions = 4), HnswIndex.addToIndex,
+        d => members(HnswIndex.loadGraphsLocal(spark, d)), HnswIndex.searchPersisted(_, _, k = 1),
+        HnswIndex.selfSearchPersisted(spark, _, numQueries = 4, k = 5)),
+      ("vamana", VamanaIndex.writeIndex(_, _, numPartitions = 4), VamanaIndex.addToIndex,
+        d => members(VamanaIndex.Graphs.loadGraphsLocal(spark, d)), VamanaIndex.searchPersisted(_, _, k = 1),
+        VamanaIndex.selfSearchPersisted(spark, _, numQueries = 4, k = 5))
+    ).foreach { case (family, write, add, ids, serve, selfSearch) =>
+      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_${family}_spec_add"
+      val freshDir = s"${System.getProperty("java.io.tmpdir")}/graft_${family}_spec_add_fresh"
+      write(emb.where($"vec_id" < 400), dir)
+      add(emb.where($"vec_id" >= 400), dir)
+      write(emb, freshDir)
+      val merged = ids(dir)
+      val fresh = ids(freshDir)
+      // the add batch must route to exactly the partitions the build's
+      // partitioner would have chosen — per-partition id MEMBERSHIP
+      // equals a fresh build over the union (graph EDGES may differ: add
+      // is insertion-order-dependent, like FAISS)
+      assert(merged.keySet == fresh.keySet, family)
+      merged.keySet.foreach { pid =>
+        assert(merged(pid) == fresh(pid), s"$family partition $pid membership")
+      }
+      assert(merged.values.map(_.size).sum == 500, family)
+      // an added vector is found at distance 0
+      val q = emb.where($"vec_id" === 450).select($"vec_id".as("query_id"), $"embedding".as("qvec"))
+      val hit = serve(q, dir).head()
+      assert(hit.getAs[Long]("vec_id") == 450L && hit.getAs[Double]("dist") == 0.0, family)
+      // and the persisted self-search still answers over the grown index
+      assert(selfSearch(dir).count() == 20, family)
     }
-    assert(merged.values.map(_.ids.length).sum == 500)
-    // an added vector is findable in its graph at distance 0
-    val owner = merged.values.find(_.ids.contains(450L)).get
-    val vec = owner.vecs(owner.ids.indexOf(450L))
-    val hit = owner.search(vec, 16).head
-    assert(owner.ids(hit._2) == 450L && hit._1 == 0.0)
-    // and the persisted self-search still answers over the grown index
-    val res = HnswIndex.selfSearchPersisted(spark, dir, numQueries = 4, k = 5)
-    assert(res.count() == 20)
   }
 
   test("searchPersisted: external queries answered over the stored graphs") {
