@@ -107,7 +107,7 @@ object IvfScale {
           IndexManifest.write(spark, bDir, IndexManifest(bFamily,
             params = Map("buckets" -> bucketB.toDouble),
             tables = Map(IndexManifest.Root -> IndexManifest.writtenSchema(
-              bucketed, Some("cluster_bucket" -> (bucketB - 1L))))))
+              bucketed, Some("cluster_bucket")))))
         }
       }
       val bAssign = IndexManifest.read(spark, bDir, bFamily)

@@ -236,10 +236,11 @@ object CorpusStats {
     * adjacent bigram — from ONE tokenize pass (r15, guide §2.4): both
     * n-gram orders ride the same explode under a kind tag, so the LM
     * corpus is scanned once where the old per-order aggregates scanned
-    * it twice. Vocabulary-sized (Heaps' law), cached MEMORY_AND_DISK;
-    * an equal-plan call (both LM scorers share the same LM-corpus
-    * split, and every bench iteration replays the same plan) reuses
-    * the single cache-manager entry instead of registering another. */
+    * it twice. Vocabulary-sized (Heaps' law), cached MEMORY_AND_DISK
+    * in the one LM slot ([[lastLmCache]]): an equal-plan call (both LM
+    * scorers share the same LM-corpus split, and every bench iteration
+    * replays the same plan) reuses the single cache-manager entry, and
+    * a different LM corpus swaps the previous table out. */
   private def lmGramCounts(lmCorpus: DataFrame, textCol: String): DataFrame = {
     val tagged = concat(
       transform(TextFunctions.tokens(col(textCol)),
@@ -249,26 +250,71 @@ object CorpusStats {
     val g = ScanSpread.spreadSmall(lmCorpus).select(explode(tagged).as("g"))
       .select(col("g.k").as("k"), col("g.gram").as("gram"))
       .groupBy(col("k"), col("gram")).agg(count(lit(1)).as("c"))
-    if (g.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else g
+    // check + persist + swap serialized, as SparseTopK's tf slot: two
+    // concurrent same-corpus scores must not both persist and then
+    // unpersist each other's shared entry
+    lastLmCache.synchronized {
+      if (g.storageLevel != org.apache.spark.storage.StorageLevel.NONE) g
+      else {
+        val t = g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val prior = lastLmCache.getAndSet(t)
+        lastLmScalars.set(null)
+        if (prior != null) prior.unpersist(blocking = false)
+        t
+      }
+    }
   }
 
-  /** Per-kind (Σ c, row count) of a gram-count table — every scalar the
-    * two LM scorers need (N, V, B), in ONE job, memoized per
-    * canonicalized plan (r15, the SparseTopK scalars discipline): the
-    * scalars are pure functions of the cached gram table, so repeat
-    * scores over the same LM corpus skip the job entirely; fresh JVMs
-    * and different corpora always recompute. */
-  private val lmScalarsMemo = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Map[Int, (Long, Long)]]()
-  private def lmGramScalars(grams: DataFrame): Map[Int, (Long, Long)] =
-    lmScalarsMemo.computeIfAbsent(
-      grams.queryExecution.analyzed.canonicalized,
-      _ => grams.groupBy(col("k"))
+  /** The gram-count table cached by the most recent LM score — ONE per
+    * process, the [[SparseTopK]] tf-slot discipline: a same-corpus score
+    * reuses it, a different-corpus score swaps it out, so scores over
+    * many LM corpora never stack cached tables. Alternating two corpora
+    * recomputes on every swap (never wrong); callers that alternate
+    * should hold their own cached gram inputs. */
+  private val lastLmCache =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame]()
+
+  /** Per-kind (Σ c, row count) of the cached gram table — every scalar
+    * the two LM scorers need (N, V, B) — with the canonicalized plan they
+    * belong to. Same lifecycle as [[lastLmCache]]: the scalars are pure
+    * functions of the cached table, so repeat scores over the same LM
+    * corpus skip their job; a different corpus swaps them out. */
+  private val lastLmScalars = new java.util.concurrent.atomic.AtomicReference[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Map[Int, (Long, Long)])]()
+
+  /** Explicit lifecycle hook: unpersist the cached gram table and drop
+    * its scalars (e.g. a pipeline done with its LM stage). Safe any time
+    * — a later score recomputes through lineage. */
+  def releaseLmCache(): Unit = lastLmCache.synchronized {
+    val g = lastLmCache.getAndSet(null)
+    lastLmScalars.set(null)
+    if (g != null) g.unpersist(blocking = false)
+  }
+
+  /** The LM slots: the cached gram table, and whether scalars are
+    * memoized. */
+  private[graft] def lmCacheSlots: (Option[DataFrame], Boolean) =
+    (Option(lastLmCache.get), lastLmScalars.get != null)
+
+  /** [[lastLmScalars]] for `grams`, computed in ONE job on a miss
+    * (r15, the SparseTopK scalars discipline). */
+  private def lmGramScalars(grams: DataFrame): Map[Int, (Long, Long)] = {
+    val plan = grams.queryExecution.analyzed.canonicalized
+    Option(lastLmScalars.get).filter(_._1 == plan).map(_._2).getOrElse {
+      val vals = grams.groupBy(col("k"))
         .agg(sum(col("c")).cast("long").as("s"), count(lit(1)).as("n"))
         .collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap)
+        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      lastLmCache.synchronized {
+        // memoize only while `grams` is still the cached slot (a
+        // concurrent different-corpus score may have swapped it)
+        val cur = lastLmCache.get
+        if (cur != null && cur.queryExecution.analyzed.canonicalized == plan)
+          lastLmScalars.set((plan, vals))
+      }
+      vals
+    }
+  }
 
   def stupidBackoff(docs: DataFrame, lmCorpus: DataFrame,
       textCol: String = "text", alpha: Double = 0.4): DataFrame = {

@@ -153,7 +153,7 @@ object FilteredSearchPlanner {
     * LocalRelation's canonical form does not include its DATA, so two
     * different in-memory corpora with one schema would falsely share an
     * entry (caught by FilteredRecallSpec's two distinct fixtures).
-    * Incremental-add refreshes ([[GraphIndex.commitGraphAdd]]) call the
+    * Incremental-add refreshes ([[GraphIndex.grownManifest]]) call the
     * uncached estimator — their corpus genuinely changed. */
   private val estimateCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()

@@ -172,9 +172,13 @@ private[operators] abstract class GraphIndex[P, G <: GraphIndex.Graph, N] extend
 
   /** `index.add` on a persisted index: route the batch with [[route]],
     * reload only the touched partitions' graphs, insert the new vectors
-    * sorted by vec_id, rewrite just those partitions (dynamic partition
-    * overwrite — untouched partitions' files never move), then commit
-    * the grown row count ([[commitGraphAdd]]). Like FAISS, the result is
+    * sorted by vec_id, and rewrite just those partitions through
+    * [[IndexManifest.commitAdd]]: the rewritten graphs are staged and
+    * published beside the old files, the manifest commits the new files
+    * in place of the touched partitions' old ones together with the
+    * grown row count ([[grownManifest]]), and only then are the old files
+    * deleted — untouched partitions' files never move, and a serve reads
+    * either the old graphs or the new ones. Like FAISS, the result is
     * insertion-order-dependent: A-then-B is not the fresh A∪B graph. */
   def addToIndex(newVectors: DataFrame, dir: String): Unit = {
     val spark = newVectors.sparkSession
@@ -187,39 +191,26 @@ private[operators] abstract class GraphIndex[P, G <: GraphIndex.Graph, N] extend
       .filter(col("part_id").isin(touched.map(Int.box): _*))
       .groupByKey(partOf _)
     val adds = routed.as[(Int, Long, Array[Float])].groupByKey(_._1)
-    // Materialize the rewritten partitions BEFORE the overwrite commit:
-    // the cogroup plan lazily reads dir/nodes, and writing over the path
-    // a live plan still reads is a read-own-delete race the moment the
-    // plan shape changes or a task retries mid-commit. localCheckpoint
-    // (eager) pins the computed rows in block storage, severing the
-    // lineage back to the files the commit is about to delete. The
+    // The staged write reads the old files lazily; none is deleted before
+    // the commit, so the plan needs no materialization point. The
     // inserted count is exact: the cogroup runs once per partition, in
-    // the checkpoint job's result stage.
+    // the write job's result stage.
     val inserted = spark.sparkContext.longAccumulator
     val rewritten = existing.cogroup(adds) { (pid, oldIt, newIt) =>
       val g = fromRows(oldIt.toArray, p)
-      // idempotent by id: a replayed batch (a crash between the overwrite
-      // commit and the ingest loop's marker) re-delivers vectors the
-      // graph already holds — skip them so the replay is a no-op, not a
+      // idempotent by id: a replayed batch (a crash between the commit
+      // and the ingest loop's marker) re-delivers vectors the graph
+      // already holds — skip them so the replay is a no-op, not a
       // duplicate-node insert
       val have = g.ids.toSet
       newIt.toArray.sortBy(_._2).foreach { case (_, id, v) =>
         if (!have.contains(id)) { insert(g, id, v); inserted.add(1L) }
       }
       toRows(g, pid)
-    }.localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      rewritten.write.mode("overwrite").partitionBy("part_id").parquet(s"$dir/nodes")
-    finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      rewritten.unpersist(blocking = false)
     }
-    commitGraphAdd(spark, dir, m, inserted.value)
+    IndexManifest.commitAdd(spark, dir, m, "nodes", replacePartitions = true,
+      commit = grownManifest(spark, dir, _, inserted.value))(
+      rewritten.write.partitionBy("part_id").parquet(_))
   }
 
   /** Test/audit hook: reload every persisted graph driver-side (bounded
@@ -234,7 +225,7 @@ private[operators] abstract class GraphIndex[P, G <: GraphIndex.Graph, N] extend
     * floor with no manual knob, memoized per (corpus, seed) within the
     * JVM and handed the exact row count and dimension of the one shape
     * aggregate. The row count snapshots WHEN the estimate was taken, so
-    * [[commitGraphAdd]] can re-estimate once adds outgrow it. */
+    * [[grownManifest]] can re-estimate once adds outgrow it. */
   private def graphManifest(params: Map[String, Double], parts: Int, embeddings: DataFrame,
       nodes: DataFrame): IndexManifest = {
     val (n, dim) = FilteredSearchPlanner.shapeOf(embeddings)
@@ -244,28 +235,26 @@ private[operators] abstract class GraphIndex[P, G <: GraphIndex.Graph, N] extend
       dupMultiplicity = Some(FilteredSearchPlanner.estimateDupMultiplicityCached(
         embeddings, shape = Some((n, dim)))),
       rowsAtEstimate = Some(n),
-      tables = Map("nodes" -> IndexManifest.writtenSchema(nodes, Some("part_id" -> (parts - 1L)))))
+      tables = Map("nodes" -> IndexManifest.writtenSchema(nodes, Some("part_id"))))
   }
 
-  /** Commit an add: the manifest's row count grows by exactly the
-    * `inserted` vectors (no listing or count of the nodes), and once the
-    * index has grown [[DupEstimateRefreshGrowth]] past the snapshot its
-    * `dup_multiplicity` describes, the estimator re-runs UNCACHED over
-    * the index's own stored vectors with the known n and dim, so only its
-    * aggregation chain runs. A deployment that streams in a heavily
-    * replicated batch thereby regains the k·m floor within one refresh
-    * interval. The manifest is rewritten in place, never deleted, so
-    * serves run beside adds. */
-  private def commitGraphAdd(spark: SparkSession, dir: String, m: IndexManifest,
-      inserted: Long): Unit = {
+  /** The manifest an add commits, given `m` with the add's file record:
+    * the row count grows by exactly the `inserted` vectors (no listing or
+    * count of the nodes), and once the index has grown
+    * [[DupEstimateRefreshGrowth]] past the snapshot its `dup_multiplicity`
+    * describes, the estimator re-runs UNCACHED over the new record's
+    * stored vectors with the known n and dim, so only its aggregation
+    * chain runs. A deployment that streams in a heavily replicated batch
+    * thereby regains the k·m floor within one refresh interval. */
+  private def grownManifest(spark: SparkSession, dir: String, m: IndexManifest,
+      inserted: Long): IndexManifest = {
     val total = m.rows.get + inserted
     val grown = m.copy(rows = Some(total))
-    IndexManifest.write(spark, dir,
-      if (total.toDouble < m.rowsAtEstimate.get * DupEstimateRefreshGrowth) grown
-      else grown.copy(rowsAtEstimate = Some(total),
-        dupMultiplicity = Some(FilteredSearchPlanner.estimateDupMultiplicity(
-          m.table(spark, dir, "nodes").select(col("vec_id"), col("vec").as("embedding")),
-          shape = Some((total, m.dim.get))))))
+    if (total.toDouble < m.rowsAtEstimate.get * DupEstimateRefreshGrowth) grown
+    else grown.copy(rowsAtEstimate = Some(total),
+      dupMultiplicity = Some(FilteredSearchPlanner.estimateDupMultiplicity(
+        m.table(spark, dir, "nodes").select(col("vec_id"), col("vec").as("embedding")),
+        shape = Some((total, m.dim.get)))))
   }
 }
 

@@ -192,7 +192,7 @@ object IvfIndex {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     IndexManifest.delete(spark, dir)
-    val assignF = Future(writeLists(assignments, dir, "overwrite"))
+    val assignF = Future(writeLists(assignments, s"$dir/assignments"))
     // the centroid side table is independent of the lists — overlap the
     // two write jobs (guide §2.6)
     import spark.implicits._
@@ -200,12 +200,11 @@ object IvfIndex {
     val centF = Future(cents.write.mode("overwrite").parquet(s"$dir/centroids"))
     Await.result(assignF, Duration.Inf)
     Await.result(centF, Duration.Inf)
-    val maxCid = centroids.iterator.map(c => math.abs(c._1)).maxOption.getOrElse(0L)
     IndexManifest.write(spark, dir, IndexManifest(Family,
       params = Map("nlist" -> centroids.length.toDouble),
       dim = centroids.headOption.map(_._2.length),
       tables = Map(
-        "assignments" -> IndexManifest.writtenSchema(assignments, Some("cluster_id" -> maxCid)),
+        "assignments" -> IndexManifest.writtenSchema(assignments, Some("cluster_id")),
         "centroids" -> IndexManifest.writtenSchema(cents))))
   }
 
@@ -218,21 +217,26 @@ object IvfIndex {
     * directory and the parquet encoding parallelizes across the
     * post-shuffle tasks — scale-adaptive in both directions, no
     * core-count constant. */
-  private def writeLists(assignments: DataFrame, dir: String, mode: String): Unit =
-    assignments.hint("rebalance", col("cluster_id")).write.mode(mode)
-      .partitionBy("cluster_id").parquet(s"$dir/assignments")
+  private def writeLists(assignments: DataFrame, path: String): Unit =
+    assignments.hint("rebalance", col("cluster_id")).write.mode("overwrite")
+      .partitionBy("cluster_id").parquet(path)
 
   /** `index.add` on a live persisted index (the reference's incremental
     * add, vector_search_cluster.py:1047-1049 via :1210-1212): assign the
-    * new batch to the EXISTING centroids and append to the partitioned
-    * assignments table — inverted lists grow in place, no rebuild, and
-    * the appended files partition-prune exactly like the originals. The
-    * batch rebalances by cluster_id like [[writeIndex]], so an add writes
-    * about one file per touched list instead of one per task and list.
-    * The manifest is unchanged (no row count is kept for IVF). */
+    * new batch to the EXISTING centroids and add its files to the
+    * partitioned assignments table — inverted lists grow in place, no
+    * rebuild, and the added files partition-prune exactly like the
+    * originals. The batch rebalances by cluster_id like [[writeIndex]],
+    * so an add writes about one file per touched list instead of one per
+    * task and list. The files are staged, published into their list
+    * directories and committed to the manifest's file record with the
+    * old files ([[IndexManifest.commitAdd]]): a serve sees the whole batch
+    * or none of it, and an add that dies before its commit adds nothing. */
   def addToIndex(newVectors: DataFrame, centroids: Array[Centroid], dir: String): Unit = {
-    IndexManifest.read(newVectors.sparkSession, dir, Family)
-    writeLists(assign(newVectors, centroids), dir, "append")
+    val spark = newVectors.sparkSession
+    val m = IndexManifest.read(spark, dir, Family)
+    IndexManifest.commitAdd(spark, dir, m, "assignments", replacePartitions = false)(
+      writeLists(assign(newVectors, centroids), _))
   }
 
   /** `index.remove_ids` analog (FAISS `IndexIVF.remove_ids`): drop a set
@@ -311,10 +315,10 @@ object IvfIndex {
         sum(when(!col("in_new"), 1L).otherwise(0L)).as("n_removed"))
   }
 
-  /** S3 — load a persisted index: both tables open with their recorded
-    * schemas, and the nlist centroid rows sort on the driver — one
-    * collect job, plus Spark's parallel listing job when the lists span
-    * more directories than its discovery threshold. */
+  /** S3 — load a persisted index: both tables open from the manifest's
+    * record (recorded schemas and files — no footer read, no directory
+    * listing at any nlist), and the nlist centroid rows sort on the
+    * driver — the one job, a collect. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String): (Array[Centroid], DataFrame) = {
     val m = IndexManifest.read(spark, dir, Family)
     val cents = m.table(spark, dir, "centroids")

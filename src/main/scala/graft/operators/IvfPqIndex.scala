@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
+import graft.sources.IndexManifest
 
 /** Combined IVF+PQ — the reference's actual `IndexIVFPQ`
   * (vector_search_cluster.py:1033-1041): vectors are assigned to a coarse
@@ -165,10 +166,24 @@ object IvfPqIndex {
 
   /** S4 for the codes table: persist the inverted PQ lists partitioned by
     * cluster_id — the 100 TB layout where a probe reads only its list's
-    * files. The codes table is ~16× smaller than the corpus (m bytes vs
-    * d×4), so even the full index is compact at rest. */
-  def writeIndex(codes: DataFrame, dir: String): Unit =
+    * files — and commit the index manifest (family `ivfpq`, the codes
+    * schema and file record) last. The codes table is ~16× smaller than
+    * the corpus (m bytes vs d×4), so even the full index is compact at
+    * rest. */
+  def writeIndex(codes: DataFrame, dir: String): Unit = {
+    val spark = codes.sparkSession
+    IndexManifest.delete(spark, dir)
     codes.write.mode("overwrite").partitionBy("cluster_id").parquet(dir)
+    IndexManifest.write(spark, dir, IndexManifest(Family,
+      tables = Map(IndexManifest.Root -> IndexManifest.writtenSchema(codes, Some("cluster_id")))))
+  }
+
+  private val Family = "ivfpq"
+
+  /** The persisted codes table, opened from its manifest — no footer
+    * read, no directory listing. */
+  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    IndexManifest.read(spark, dir, Family).table(spark, dir, IndexManifest.Root)
 
   /** Search a persisted codes table with static partition pruning: probe
     * cluster ids resolve first (Q×nprobe ids — control-plane), then push

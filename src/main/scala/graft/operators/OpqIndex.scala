@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexManifest
+
 /** Optimized Product Quantization — FAISS's `OPQMatrix` +
   * `IndexPreTransform` pre-stage (Ge et al., "Optimized Product
   * Quantization", CVPR 2013, non-parametric solution): learn an orthogonal
@@ -277,9 +279,9 @@ object OpqIndex {
         // codes table is already at `dir` (deterministic seeded build ⇒
         // identical bytes) — the search then reads the persisted lists,
         // which is the honest serving cost once an index exists
-        if (!(reuseIndex && new java.io.File(dir, "_SUCCESS").exists()))
+        if (!(reuseIndex && IndexManifest.exists(spark, dir)))
           IvfPqIndex.writeIndex(codes, dir)
-        spark.read.parquet(dir)
+        IvfPqIndex.readIndex(spark, dir)
       case None => codes
     }
     val q = rotated.where(col("vec_id") < numQueries)

@@ -293,7 +293,7 @@ object SparseTopK {
           new org.apache.hadoop.fs.Path(s"$path/_termstats")))
         throw new IncompleteIndexException(path,
           s"rename of $statsTmp to $path/_termstats failed")
-      val bucketCol = Some("bucket" -> (nb - 1L))
+      val bucketCol = Some("bucket")
       IndexManifest.write(spark, path, IndexManifest(Family,
         numBuckets = Some(nb), totalPostings = Some(total),
         tables = Map(

@@ -737,7 +737,7 @@ object Registry {
       IvfPqIndex.writeIndex(codes, idxDir)
       val q = emb.where(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      IvfPqIndex.searchPruned(q, cents, cb, s.read.parquet(idxDir),
+      IvfPqIndex.searchPruned(q, cents, cb, IvfPqIndex.readIndex(s, idxDir),
         nprobe = 2, m = 8, subDim = 8, k = 10)
     }),
 

@@ -404,7 +404,7 @@ object StreamingAnalytics {
   /** [[indexIngestLoop]] for the persisted HNSW family: each micro-batch
     * routes to its graph partitions and is inserted incrementally
     * ([[graft.operators.HnswIndex.addToIndex]] — only touched partitions
-    * rewrite, dynamic partition overwrite), with the same per-batch
+    * rewrite, committed through the manifest), with the same per-batch
     * marker replay guard. The FAISS `index.add`-on-HNSW contract as a
     * stream. */
   def hnswIngestLoop(

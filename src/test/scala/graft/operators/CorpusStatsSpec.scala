@@ -107,6 +107,30 @@ class CorpusStatsSpec extends SparkSpec {
     assert(scores(1L) > scores(2L))
   }
 
+  test("LM scores over two corpora in turn keep one cached gram table and one scalar memo") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    val lmA = Seq((100L, "a b b a c")).toDF("doc_id", "text")
+    val lmB = Seq((200L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    val docs = Seq((1L, "a b z"), (2L, "the quick fox")).toDF("doc_id", "text")
+    def score(lm: org.apache.spark.sql.DataFrame) =
+      (CorpusStats.stupidBackoff(docs, lm).collect().toSeq, CorpusStats.knBigram(docs, lm).collect().toSeq)
+    CorpusStats.releaseLmCache()
+    assert(CorpusStats.lmCacheSlots == (None, false))
+    val a = score(lmA)
+    val gramsA = CorpusStats.lmCacheSlots._1.get
+    val b = score(lmB)
+    val (gramsB, memo) = CorpusStats.lmCacheSlots
+    assert(memo && gramsB.exists(_.storageLevel != NONE))
+    assert(gramsA.storageLevel == NONE, "a second LM corpus left the first one's gram table cached")
+    // swapping back recomputes the same rows, and so does a cold score
+    assert(score(lmA) == a)
+    CorpusStats.releaseLmCache()
+    assert(CorpusStats.lmCacheSlots == (None, false))
+    assert(gramsA.storageLevel == NONE && gramsB.get.storageLevel == NONE)
+    assert(score(lmB) == b)
+    CorpusStats.releaseLmCache()
+  }
+
   test("knBigram: hand-derived interpolated KN values on a tiny LM") {
     // LM "a b b a c": unigrams a:2 b:2 c:1 (V=3); bigrams a b/b b/b a/a c
     // each once (B=4); Pcont denom = B+V+1 = 8; D = 0.75

@@ -121,7 +121,7 @@ class GraphIndexGoldenSpec extends SparkSpec {
         assert(IndexManifest.read(spark, dir, fam.name).rows.contains(3000L))
       }
       info(got.map { case (k, v) => s"$k=$v" }.mkString(" "))
-      assert(m.formatVersion == 1)
+      assert(m.formatVersion == 2)
       assert(m.tables(fam.table) == fam.schema)
       assert(got.toMap == fam.pins)
     }

@@ -12,9 +12,11 @@ import graft.sources.{IncompleteIndexException, IndexManifest}
 
 /** The index manifest is the only thing an open reads: every family's
   * recorded schemas equal what footer inference would report, opening
-  * launches no Spark job, a directory whose write never committed is
-  * rejected by every reader, and incremental graph adds keep the row
-  * count and the near-dup estimate exact. */
+  * launches no Spark job and lists no directory at any partition count,
+  * a directory whose write never committed is rejected by every reader,
+  * a file no committed manifest names is never served, and incremental
+  * graph adds keep the row count and the near-dup estimate exact and
+  * retire the files they supersede. */
 class IndexManifestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -192,6 +194,176 @@ class IndexManifestSpec extends SparkSpec {
       assert(m2.rowsAtEstimate.contains(490L) && m2.dupMultiplicity == m.dupMultiplicity, family)
     }
   }
+
+  private lazy val cents64 = IvfIndex.seedCentroids(emb, 64)
+  private lazy val ivf64Dir = {
+    val d = tmp("mf_ivf64"); IvfIndex.writeIndex(IvfIndex.assign(emb, cents64), cents64, d); d
+  }
+  private lazy val spann64Dir = {
+    val d = tmp("mf_spann64")
+    IvfIndex.writeIndex(IvfIndex.assignMulti(emb, cents64, r = 2), cents64, d); d
+  }
+  private lazy val ta64Dir = {
+    val d = tmp("mf_ta64")
+    SparseTopK.writeIndex(SparseTopK.buildImpactIndex(
+      spark.read.parquet(s"$sf0001/documents.parquet")), d, numBuckets = 64)
+    d
+  }
+  private lazy val ivfpqCodes =
+    IvfPqIndex.buildSeeded(emb, nlist = 8, m = 8, subDim = 8, ksub = 16)._3
+  private lazy val ivfpqDir = { val d = tmp("mf_ivfpq"); IvfPqIndex.writeIndex(ivfpqCodes, d); d }
+  private def queries(lo: Long, hi: Long) =
+    emb.where($"vec_id" >= lo && $"vec_id" < hi).select($"vec_id".as("query_id"), $"embedding".as("qvec"))
+
+  /** Directory listings of the local filesystem while `body` runs. */
+  private def listingsDuring(body: => Unit): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[CountingListFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    CountingListFs.calls.set(0)
+    try { body; CountingListFs.calls.get }
+    finally {
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  test("at nlist 64 and 64 TA buckets, opens launch no job, and opens and serves list no directory") {
+    val dirs = Seq(ivf64Dir -> "ivf", spann64Dir -> "ivf", ta64Dir -> "ta", ivfpqDir -> "ivfpq")
+    val m = IndexManifest.read(spark, ivf64Dir, "ivf")
+    assert(m.files("assignments").map(_.partitionDir).distinct.size > 32, "fixture spans > 32 lists")
+    // controls: the listing open this replaces runs Spark's parallel
+    // listing job past 32 directories, and the counting FS does count
+    assert(jobsDuring(spark.read.schema(m.tables("assignments"))
+      .parquet(s"$ivf64Dir/assignments").schema) >= 1)
+    assert(listingsDuring(spark.read.schema(m.tables("assignments"))
+      .parquet(s"$ivf64Dir/assignments").schema) > 0)
+    def openAll(): Unit = dirs.foreach { case (d, f) =>
+      val mf = IndexManifest.read(spark, d, f)
+      mf.tables.keys.foreach(t => mf.table(spark, d, t).schema)
+    }
+    assert(jobsDuring(openAll()) == 0, "opening the committed indexes launched a job")
+    Seq(ivf64Dir, spann64Dir).foreach { d =>
+      val loads = jobsDuring(IvfIndex.loadIndex(spark, d))
+      assert(loads <= 1, s"loadIndex($d) launched $loads jobs")
+    }
+    val q = queries(0, 4)
+    val terms = Seq((0L, "vector"), (1L, "spark")).toDF("query_id", "term")
+    val listed = listingsDuring {
+      openAll()
+      val (c, a) = IvfIndex.loadIndex(spark, ivf64Dir)
+      assert(IvfIndex.searchPruned(q, c, a, nprobe = 4, k = 5).collect().length == 20)
+      val (c2, a2) = IvfIndex.loadIndex(spark, spann64Dir)
+      assert(IvfIndex.searchMultiPruned(q, c2, a2, nprobe = 4, k = 5).collect().length == 20)
+      assert(SparseTopK.taTopKBatchPersisted(spark, ta64Dir, terms, 3).collect().nonEmpty)
+    }
+    assert(listed == 0, s"$listed directory listings while opening and serving")
+  }
+
+  test("IVFPQ commits a manifest: recorded schema and rows equal the written codes") {
+    val opened = IvfPqIndex.readIndex(spark, ivfpqDir)
+    assert(opened.schema == spark.read.parquet(ivfpqDir).schema)
+    val cols = Seq($"vec_id", $"cluster_id".cast("long"), $"codes")
+    assert(opened.select(cols: _*).exceptAll(ivfpqCodes.select(cols: _*)).isEmpty &&
+      ivfpqCodes.select(cols: _*).exceptAll(opened.select(cols: _*)).isEmpty)
+  }
+
+  test("a file no committed manifest names is never served, before or after a later add") {
+    val dir = tmp("mf_orphan")
+    IvfIndex.writeIndex(IvfIndex.assign(emb.where($"vec_id" < 400), cents), cents, dir)
+    val q = queries(0, 8)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def served(a: org.apache.spark.sql.DataFrame, c: Array[IvfIndex.Centroid]) =
+      (rows(a.select($"vec_id", $"cluster_id".cast("long"))),
+        rows(IvfIndex.searchPruned(q, c, a, nprobe = 4, k = 5)))
+    def persisted = { val (c, a) = IvfIndex.loadIndex(spark, dir); served(a, c) }
+    def inMemory(hi: Long) = served(IvfIndex.assign(emb.where($"vec_id" < hi), cents), cents)
+    assert(persisted == inMemory(400))
+    // what an add that died before its commit leaves: a parquet file in
+    // a list directory — here a copy of a list's own file, so serving it
+    // would duplicate that list's vectors
+    val f = IndexManifest.read(spark, dir, "ivf").files("assignments").head
+    val src = java.nio.file.Paths.get(s"$dir/assignments/${f.path}")
+    Files.copy(src, src.resolveSibling(s"part-99999-orphan.c000.snappy.parquet"))
+    assert(spark.read.parquet(s"$dir/assignments").count() > 400, "a listing open serves the orphan")
+    assert(persisted == inMemory(400))
+    IvfIndex.addToIndex(emb.where($"vec_id" >= 400 && $"vec_id" < 450), cents, dir)
+    assert(persisted == inMemory(450))
+  }
+
+  test("a cached open of one committed record is not served for a later one") {
+    val dir = tmp("mf_cached")
+    HnswIndex.writeIndex(emb.where($"vec_id" < 300), dir, numPartitions = 4)
+    def open() = IndexManifest.read(spark, dir, "hnsw").table(spark, dir, "nodes")
+    val before = open().cache()
+    try {
+      assert(before.count() == 300L)
+      HnswIndex.addToIndex(emb.where($"vec_id" >= 300 && $"vec_id" < 400).select($"vec_id", $"embedding"), dir)
+      assert(open().count() == 400L)
+      assert(open().sameSemantics(open()), "one record opens as one relation")
+    } finally before.unpersist()
+  }
+
+  test("graph adds retire the files they supersede, and a serve beside an add reads one snapshot") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val slice = (lo: Long, hi: Long) =>
+      emb.where($"vec_id" >= lo && $"vec_id" < hi).select($"vec_id", $"embedding")
+    Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit,
+        (org.apache.spark.sql.DataFrame, String) => Unit,
+        (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame)](
+      ("hnsw", HnswIndex.writeIndex(_, _, numPartitions = 4), HnswIndex.addToIndex,
+        HnswIndex.searchPersisted(_, _, k = 1)),
+      ("vamana", VamanaIndex.writeIndex(_, _, numPartitions = 4), VamanaIndex.addToIndex,
+        VamanaIndex.searchPersisted(_, _, k = 1))
+    ).foreach { case (family, write, add, serve) =>
+      val dir = tmp(s"mf_retire_$family")
+      write(slice(0, 300), dir)
+      // the queries are the vectors added next: each finds itself only
+      // once the add has committed
+      val q = queries(300, 340)
+      def served() = serve(q, dir).collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
+      val before = served()
+      val during = Future(served())
+      add(slice(300, 400), dir)
+      val after = served()
+      assert(after == (300L until 340L).map(i => (i, i)), family)
+      val concurrent = Await.result(during, Duration.Inf)
+      assert(concurrent == before || concurrent == after, s"$family serve mixed snapshots")
+      add(slice(400, 450), dir)
+      val nodes = IndexManifest.read(spark, dir, family).table(spark, dir, "nodes")
+      val plain = spark.read.parquet(s"$dir/nodes")
+      assert(nodes.count() == 450L, family)
+      assert(plain.exceptAll(nodes).isEmpty && nodes.exceptAll(plain).isEmpty,
+        s"$family: a listing read differs from the manifest open")
+      val leftovers = Files.walk(java.nio.file.Paths.get(s"$dir/nodes")).toArray
+        .map(_.toString).filter(_.contains("_staging"))
+      assert(leftovers.isEmpty, s"$family staging left behind: ${leftovers.mkString(", ")}")
+    }
+  }
+}
+
+
+/** Local filesystem that counts directory listings. */
+class CountingListFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RemoteIterator}
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingListFs.calls.incrementAndGet(); super.listStatus(f)
+  }
+  override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
+    CountingListFs.calls.incrementAndGet(); super.listLocatedStatus(f)
+  }
+  override def listFiles(f: Path, recursive: Boolean): RemoteIterator[LocatedFileStatus] = {
+    CountingListFs.calls.incrementAndGet(); super.listFiles(f, recursive)
+  }
+  override def listStatusIterator(f: Path): RemoteIterator[FileStatus] = {
+    CountingListFs.calls.incrementAndGet(); super.listStatusIterator(f)
+  }
+}
+
+object CountingListFs {
+  val calls = new AtomicInteger()
 }
 
 /** Local filesystem whose rename of TA's `_termstats` staging directory
